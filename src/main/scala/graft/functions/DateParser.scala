@@ -1,11 +1,24 @@
 package graft.functions
 
-import java.time.{LocalDate, LocalDateTime, LocalTime, Year}
+import java.time.{LocalDate, LocalDateTime, LocalTime, Month, Year}
 
 /** Lenient date/time parsing with the reference's semantics
   * (meza/convert.py:316-510): fuzzy multi-format parse, `dayfirst`,
   * impossible-day repair (day tokens 29–32 decremented until valid), and the
   * `9999-12-31` sentinel for unparseable input.
+  *
+  * [[parse]] first tries an exact, regex-free scan of the two plain shapes
+  * that fill most real date columns, with ASCII digits only and nothing
+  * around them:
+  *  - `yyyy-m-d`, with the ISO branch's `dayfirst` swap;
+  *  - `m/d/yyyy` with a year of at least 100, with the slash branch's
+  *    `dayfirst` and impossible-month swap.
+  * The scan answers only when the month is 1–12 and the day exists in it,
+  * which is exactly when the regex path's first attempt parses the same date.
+  * Everything else falls through, unchanged, to the regex path: surrounding
+  * blanks, 2-digit years and 4-digit years under 100 (pivoted through
+  * `expandYear`), `-` between US fields, 3-digit fields, impossible days
+  * (the 29–32 repair), times, month names and garbage (the sentinel).
   *
   * Pure JVM code, usable on driver (type inference) and executors (inside the
   * Lenient* Catalyst expressions). No Spark imports.
@@ -59,6 +72,17 @@ object DateParser {
     if (hh > 23 || m > 59 || s > 59) None else Some(LocalTime.of(hh, m, s))
   }
 
+  /** Whether `yyyy-mo-d` reads as `yyyy-d-mo`: dateutil applies dayfirst
+    * even to ISO when both slots are ambiguous. */
+  private def isoSwap(mo: Int, d: Int, dayFirst: Boolean): Boolean =
+    dayFirst && d <= 12 && mo <= 12
+
+  /** Whether `a/b/y` reads as day/month: dateutil honours dayfirst, but
+    * swaps when the nominal month is impossible and the other slot fits
+    * (convert.py doctests). */
+  private def slashSwap(a: Int, b: Int, dayFirst: Boolean): Boolean =
+    if (dayFirst) b <= 12 || a > 12 else a > 12 && b <= 12
+
   /** One parse attempt of the full string (no repair). */
   private def attempt(raw: String, dayFirst: Boolean): Attempt = {
     if (raw == null) return Invalid
@@ -97,8 +121,7 @@ object DateParser {
     IsoRe.findFirstMatchIn(s) match {
       case Some(m) =>
         val (mo, d) = (m.group(2).toInt, m.group(3).toInt)
-        // dateutil applies dayfirst even to ISO when both slots are ambiguous
-        if (dayFirst && d <= 12 && mo <= 12) tryDate(m.group(1).toInt, d, mo)
+        if (isoSwap(mo, d, dayFirst)) tryDate(m.group(1).toInt, d, mo)
         else tryDate(m.group(1).toInt, mo, d)
         s = s.substring(0, m.start) + " " + s.substring(m.end)
       case None =>
@@ -106,12 +129,7 @@ object DateParser {
           case Some(m) =>
             val (a, b) = (m.group(1).toInt, m.group(2).toInt)
             val y = expandYear(m.group(3).toInt)
-            // dateutil: honor dayfirst, but swap when the nominal month is
-            // impossible and the other slot fits (convert.py doctests).
-            val (mo, d) =
-              if (dayFirst) { if (b <= 12) (b, a) else if (a <= 12) (a, b) else (b, a) }
-              else { if (a <= 12) (a, b) else if (b <= 12) (b, a) else (a, b) }
-            tryDate(y, mo, d)
+            if (slashSwap(a, b, dayFirst)) tryDate(y, b, a) else tryDate(y, a, b)
             s = s.substring(0, m.start) + " " + s.substring(m.end)
           case None =>
             MonthNameRe.findFirstMatchIn(s).flatMap { m =>
@@ -141,15 +159,70 @@ object DateParser {
     if (date.isEmpty && time.isEmpty) Invalid else Parsed(date, time)
   }
 
+  /** The value of `s(from until to)` when it is 1–4 ASCII digits, else -1. */
+  private def digits(s: String, from: Int, to: Int): Int = {
+    if (to <= from || to - from > 4) return -1
+    var v = 0
+    var i = from
+    while (i < to) {
+      val c = s.charAt(i)
+      if (c < '0' || c > '9') return -1
+      v = v * 10 + (c - '0')
+      i += 1
+    }
+    v
+  }
+
+  /** The date when month and day are valid, else null (no exception). */
+  private def validDate(y: Int, mo: Int, d: Int): LocalDate =
+    if (mo < 1 || mo > 12 || d < 1 || d > Month.of(mo).length(Year.isLeap(y))) null
+    else LocalDate.of(y, mo, d)
+
+  /** The regex-free fast path (see the object doc): the date of a plain
+    * `yyyy-m-d` or `m/d/yyyy` string, or null to fall through. */
+  private def plainDate(s: String, dayFirst: Boolean): LocalDate = {
+    if (s == null) return null
+    val n = s.length
+    if (n < 8 || n > 10) return null
+    if (s.charAt(4) == '-') {
+      val j = s.indexOf('-', 5)
+      if (j < 6 || j > 7 || n - j > 3) return null
+      val y = digits(s, 0, 4)
+      val mo = digits(s, 5, j)
+      val d = digits(s, j + 1, n)
+      if (y < 0 || mo < 0 || d < 0) null
+      else if (isoSwap(mo, d, dayFirst)) validDate(y, d, mo)
+      else validDate(y, mo, d)
+    } else {
+      val i = s.indexOf('/')
+      val j = s.indexOf('/', i + 1)
+      if (i < 1 || i > 2 || j - i < 2 || j - i > 3 || n - j != 5) return null
+      val a = digits(s, 0, i)
+      val b = digits(s, i + 1, j)
+      val y = digits(s, j + 1, n)
+      if (a < 0 || b < 0 || y < 100) null
+      else if (slashSwap(a, b, dayFirst)) validDate(y, b, a)
+      else validDate(y, a, b)
+    }
+  }
+
   private val badNums = Seq("29", "30", "31", "32")
   private val goodNums = Seq("31", "30", "29", "28")
 
   /** Full lenient parse incl. impossible-day repair (convert.py:416-436):
     * first bad token 29–32 found as a substring is replaced by 31,30,29,28 in
     * turn until an attempt parses. Returns None only when nothing parses —
-    * callers substitute the sentinel.
+    * callers substitute the sentinel. Plain dates take the fast path.
     */
   def parse(content: String, dayFirst: Boolean = false): Option[(Option[LocalDate], Option[LocalTime])] = {
+    val d = plainDate(content, dayFirst)
+    if (d != null) Some((Some(d), None)) else parseRegex(content, dayFirst)
+  }
+
+  /** The general regex path behind [[parse]], on its own so that specs can
+    * hold the fast path to it. */
+  private[functions] def parseRegex(content: String,
+      dayFirst: Boolean): Option[(Option[LocalDate], Option[LocalTime])] = {
     if (content == null) return None
     val options: Seq[String] = badNums.find(content.contains) match {
       case Some(bad) => content +: goodNums.map(content.replace(bad, _))
@@ -169,9 +242,12 @@ object DateParser {
       case None => NullDateTime
     }
 
-  /** meza to_date (convert.py:439-475). */
-  def toDate(content: String, dayFirst: Boolean = false): LocalDate =
-    toDatetime(content, dayFirst).toLocalDate
+  /** meza to_date (convert.py:439-475). A plain date skips the Option and
+    * LocalDateTime round trip of [[toDatetime]]. */
+  def toDate(content: String, dayFirst: Boolean = false): LocalDate = {
+    val d = plainDate(content, dayFirst)
+    if (d != null) d else toDatetime(content, dayFirst).toLocalDate
+  }
 
   /** meza to_time (convert.py:478-510); canonical HH:mm:ss string (SURVEY §1.2). */
   def toTime(content: String): LocalTime = toDatetime(content).toLocalTime

@@ -16,8 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * cannot express (it is single-format and null-on-error).
   *
   * CodegenFallback: the surrounding projection still whole-stage-codegens;
-  * only this leaf falls back to eval — acceptable because lenient parsing is
-  * an ingest-time operation, not a hot inner-loop predicate.
+  * only this leaf falls back to eval. The leaf sits on meza's ingest path
+  * (read → detect → cast → write), so its per-row cost is the cast's cost:
+  * plain `yyyy-m-d` and `m/d/yyyy` strings take `DateParser`'s regex-free
+  * fast path, and only the rest pay for the regex parse.
   */
 case class LenientTimestamp(child: Expression, dayFirst: Boolean = false)
     extends UnaryExpression with CodegenFallback {

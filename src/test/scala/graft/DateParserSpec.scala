@@ -62,6 +62,26 @@ class DateParserSpec extends AnyFunSuite {
       assert(dt(in, dayFirst = true) == LocalDateTime.parse(want))
     }
 
+  // Boundary cases of the regex-free fast path, pinned to what the regex
+  // path returned before the fast path existed: a 4-digit year under 100
+  // still pivots, impossible days still repair (the token may collide with
+  // the year), impossible months still give the sentinel, blanks still trim.
+  val fastPathBoundary: Seq[(String, Boolean, String)] = Seq(
+    ("01/01/0001", false, "2001-01-01"),
+    ("2023-02-29", false, "2023-02-28"),
+    ("2030-02-30", false, "2028-02-28"),
+    ("2024-13-01", false, "9999-12-31"),
+    ("2024-00-10", false, "9999-12-31"),
+    (" 2024-01-16", false, "2024-01-16"),
+    ("13/05/2024", false, "2024-05-13"),
+    ("13/05/2024", true, "2024-05-13"))
+
+  for ((in, dayFirst, want) <- fastPathBoundary)
+    test(s"fast-path boundary: to_date('$in'${if (dayFirst) ", dayfirst" else ""}) == $want") {
+      assert(DateParser.toDate(in, dayFirst) == LocalDate.parse(want))
+      assert(dt(in, dayFirst) == LocalDate.parse(want).atStartOfDay)
+    }
+
   test("to_date / to_time components (convert.py:439-510)") {
     assert(DateParser.toDate("5/4/82") == LocalDate.of(1982, 5, 4))
     assert(DateParser.toDate("2/32/82") == LocalDate.of(1982, 2, 28))

@@ -3,13 +3,14 @@ package graft
 import java.time.LocalDate
 
 import org.scalacheck.{Gen, Prop, Properties}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
-import graft.functions.DateParser
+import graft.functions.{DateParser, RegexPath}
 
 /** Property tests for the lenient datetime parser (SURVEY §5 uplift):
-  * round-trips, sentinel behavior, repair invariants. Pure driver-side code
-  * (no Spark session); the Column forms are covered by LenientSpec goldens.
+  * round-trips, sentinel behavior, repair invariants, and the regex-free fast
+  * path held to the regex path. Pure driver-side code (no Spark session); the
+  * Column forms are covered by LenientSpec.
   */
 object LenientPropSpec extends Properties("DateParser") {
 
@@ -64,5 +65,47 @@ object LenientPropSpec extends Properties("DateParser") {
     forAll(Gen.choose(0, 23), Gen.choose(0, 59)) { (h, m) =>
       val t = DateParser.toTime(f"$h%02d:$m%02d")
       t.getHour == h && t.getMinute == m
+    }
+
+  // ---- differential: parse (fast path first) against the regex path alone --
+
+  // around and beyond the fast path's edges: years the regex path pivots
+  // (0001-0099), plain years, years that collide with the 29-32 repair
+  // token; months and days out of range; padding, 3-digit fields, blanks,
+  // and the separators the fast path leaves to the regex path
+  private val year: Gen[String] = for {
+    y <- Gen.frequency(2 -> Gen.choose(1, 99), 5 -> Gen.choose(1900, 2100),
+      3 -> Gen.choose(2029, 2032))
+    padded <- Gen.frequency(4 -> true, 1 -> false)
+  } yield if (padded) f"$y%04d" else y.toString
+
+  private def field(lo: Int, hi: Int): Gen[String] =
+    Gen.choose(lo, hi).flatMap(v => Gen.frequency(
+      4 -> Gen.const(v.toString), 4 -> Gen.const(f"$v%02d"), 1 -> Gen.const(f"$v%03d")))
+
+  private val blank: Gen[String] = Gen.frequency(8 -> "", 1 -> " ", 1 -> "  ")
+
+  private val dateString: Gen[String] = for {
+    y <- year
+    m <- field(0, 13)
+    d <- field(0, 33)
+    shape <- Gen.oneOf(s"$y-$m-$d", s"$m/$d/$y", s"$m-$d-$y", s"$y/$m/$d")
+    lead <- blank
+    trail <- blank
+  } yield lead + shape + trail
+
+  private def agrees(s: String): Boolean =
+    Seq(false, true).forall { df =>
+      DateParser.parse(s, df) == RegexPath.parse(s, df) &&
+      DateParser.toDatetime(s, df) == RegexPath.toDatetime(s, df) &&
+      DateParser.toDate(s, df) == RegexPath.toDatetime(s, df).toLocalDate
+    } &&
+    DateParser.isDate(s) == RegexPath.isDate(s) &&
+    DateParser.isDatetime(s) == RegexPath.isDatetime(s)
+
+  property("the fast path agrees with the regex path (parse, toDatetime, isDate, isDatetime)") =
+    forAll(Gen.listOfN(50, dateString)) { ss =>
+      val bad = ss.filterNot(agrees)
+      bad.isEmpty :| bad.map(b => s"'$b'").mkString("disagree on ", ", ", "")
     }
 }

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Lenient, LenientDatetimeExpr}
+import graft.functions.{DateParser, Lenient, LenientDatetimeExpr}
+import graft.types.DetectTypes
 
 /** Lenient scalar casts — goldens from the reference doctests
   * (meza/convert.py, meza/fntools.py) verified against the running reference.
@@ -86,5 +87,21 @@ class LenientSpec extends SparkSpec {
     val got = df.select(
       LenientDatetimeExpr.lenientDate(x, dayFirst = true).cast("string")).head.getString(0)
     assert(got == "1982-04-05")
+  }
+
+  test("typeCast's lenient date column equals DateParser.toDate row by row") {
+    // plain ISO and US dates (the fast path), padded and unpadded, next to
+    // strings the fast path leaves to the regex path
+    val in = Seq("2024-01-16", "2024-1-6", "01/16/2024", "1/6/2024", "05/04/2024",
+      "13/05/2024", "2029-01-29", " 2024-01-16", "2024-01-16 ", "01-16-2024",
+      "2024/01/16", "2024-001-16", "2023-02-29", "2030-02-30", "2024-13-01",
+      "2024-00-10", "01/01/0001", "5/4/82", "2024-01-16 14:00", "spam", "", null)
+    val df = in.toDF("d")
+    for (dayFirst <- Seq(false, true)) {
+      val got = DetectTypes.typeCast(df, Seq(DetectTypes.FieldType("d", "date")),
+        dayFirst = dayFirst).select(col("d").cast("string")).collect().map(_.getString(0))
+      val want = in.map(DateParser.toDate(_, dayFirst).toString)
+      assert(got.toSeq == want, s"dayFirst=$dayFirst")
+    }
   }
 }
