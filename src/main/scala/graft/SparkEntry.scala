@@ -20,4 +20,17 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys get a weaker rows-only check. */
   def oracleSql: Map[String, String] = Registry.oracles
+
+  /** The local session conf every graft main and the test suite share:
+    * `local[cores]` with as many shuffle partitions, AQE, UTC session time,
+    * nanosecond parquet timestamps read as longs (events.parquet is
+    * TIMESTAMP(NANOS); see Tables.events), and no UI. Callers add only
+    * their own settings (app name, warehouse dir, extra conf). */
+  private[graft] def localSession(cores: String): SparkSession.Builder =
+    SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
 }

@@ -1,6 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -34,33 +37,79 @@ object Ops {
     * (guide §2.3, "aggregate before you shuffle" — measured 0.9 → 4.3 s
     * on q01), so only operators whose measured map cost exceeds the
     * exchange opt in. Scale-adaptive: a production multi-file table plans
-    * >= cores/2 splits and passes through untouched;
-    * `spark.graft.scan.fanout=false` disables the seam. */
-  private[graft] def fanoutScan(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val enabled =
-      spark.conf.getOption("spark.graft.scan.fanout").forall(_.toBoolean)
-    if (!enabled || cores < 4) df
-    else if (df.rdd.getNumPartitions * 2 >= cores) df
-    else df.repartition(cores)
-  }
+    * >= cores/2 splits and passes through untouched. */
+  private[graft] def fanoutScan(df: DataFrame): DataFrame =
+    if (starved(df)) df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 
   /** [[fanoutScan]] keyed on the consumer's own grouping columns: same
-    * gate (no-op at any real multi-split layout, `spark.graft.scan.fanout`
-    * kill switch), but the exchange is a hash repartition that the
-    * downstream groupBy/window on the same keys absorbs (EnsureRequirements
-    * adds no second shuffle), and it avoids the local sort every KEYLESS
-    * repartition pays (SPARK-23207 / `sortBeforeRepartition`) — measured
-    * the difference between a win and a loss on the finance bar rollup. */
-  private[graft] def fanoutScanBy(df: DataFrame, keys: Column*): DataFrame = {
-    val spark = df.sparkSession
-    val cores = spark.sparkContext.defaultParallelism
-    val enabled =
-      spark.conf.getOption("spark.graft.scan.fanout").forall(_.toBoolean)
-    if (!enabled || cores < 4) df
-    else if (df.rdd.getNumPartitions * 2 >= cores) df
-    else df.repartition(keys: _*)
+    * gate (no-op at any real multi-split layout), but the exchange is a
+    * hash repartition that the downstream groupBy/window on the same keys
+    * absorbs (EnsureRequirements adds no second shuffle), and it avoids
+    * the local sort every KEYLESS repartition pays (SPARK-23207 /
+    * `sortBeforeRepartition`) — measured the difference between a win and
+    * a loss on the finance bar rollup. */
+  private[graft] def fanoutScanBy(df: DataFrame, keys: Column*): DataFrame =
+    if (starved(df)) df.repartition(keys: _*) else df
+
+  /** The fanout gate: at least 4 cores, and an input planning fewer
+    * partitions than half of them. */
+  private def starved(df: DataFrame): Boolean = {
+    val cores = df.sparkSession.sparkContext.defaultParallelism
+    cores >= 4 && df.rdd.getNumPartitions * 2 < cores
+  }
+
+  // ---------------------------------------------------------- lineage cut
+  /** The one lineage cut: eagerly materializes `df` and returns a relation
+    * whose plan is a scan of the stored rows, so every later consumer reads
+    * that copy instead of replaying `df`'s upstream. Callers cut where a
+    * relation has several plan consumers that would otherwise each
+    * re-derive it, or where an iterate's lineage would grow per round.
+    *
+    * The mode is worked out, not configured: with
+    * `sparkContext.setCheckpointDir` set the cut is a RELIABLE checkpoint
+    * (files in the dir; survives executor loss — the mode for long jobs on
+    * a cluster), otherwise a localCheckpoint (executor block storage:
+    * faster, but a lost executor aborts the job — acceptable in local mode
+    * and for short jobs; rerun).
+    *
+    * Eager, because the point of a cut is to run the upstream ONCE, here,
+    * before the relation fans out to its consumers; the returned plan
+    * then carries the materialized size that AQE and broadcast planning
+    * read.
+    *
+    * Reclaiming: local blocks fall to the ContextCleaner as references
+    * drop. Reliable files are deleted by the ContextCleaner only under
+    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
+    * false), so an iterate names the generation each cut supersedes —
+    * `superseded`, the cuts no plan still to run reads once `df` is
+    * materialized — and they go to [[release]] right after the cut. A
+    * non-iterative reliable cut needs that conf to be reclaimed before
+    * the application ends. */
+  private[graft] def materialize(df: DataFrame, superseded: DataFrame*): DataFrame = {
+    val cut =
+      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(true)
+      else df.localCheckpoint(true)
+    superseded.foreach(release)
+    cut
+  }
+
+  /** Deletes the reliable checkpoint directory behind a [[materialize]]
+    * result (or a projection of one). Call it only once no plan still to
+    * run reads the cut — an iterate's previous generation, after the next
+    * generation materialized. A local cut, or a relation that is not a
+    * cut, is left alone. Best-effort: a failed delete leaves the files. */
+  private[graft] def release(df: DataFrame): Unit = {
+    def cutOf(p: LogicalPlan): Option[LogicalRDD] = p match {
+      case r: LogicalRDD => Some(r)
+      case Project(_, child) => cutOf(child)
+      case _ => None
+    }
+    cutOf(df.queryExecution.analyzed).flatMap(_.rdd.getCheckpointFile).foreach { f =>
+      val path = new Path(f)
+      try path.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).delete(path, true)
+      catch { case _: java.io.IOException => () }
+    }
   }
 
   // ---------------------------------------------------------------- P1: cut

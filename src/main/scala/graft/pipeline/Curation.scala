@@ -610,11 +610,10 @@ object Curation {
     // downstream groupBys and the rank window inherit the partitioning.
     // The caller projects its input to (group, score, key [+ output
     // columns]) by contract, so the cut is a narrow relation, not raw rows.
-    val withG = df.withColumn("__g",
+    val withG = graft.operators.Ops.materialize(df.withColumn("__g",
         coalesce(col(groupCol).cast("string"), lit("")))
       .withColumn("__gn", col(groupCol).isNull)
-      .repartition(col("__g"), col("__gn"))
-      .localCheckpoint(true)
+      .repartition(col("__g"), col("__gn")))
     val counts = withG.groupBy("__g", "__gn").agg(count(lit(1)).as("__n"))
     val j0 = withG.join(counts, Seq("__g", "__gn"))
     val drawHex = substring(md5(concat(lit("tkpg:"),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ops
+
 /** Deduplication family for training-data pipelines: exact, MinHash+LSH,
   * SimHash, n-gram Jaccard. All are single logical plans built from
   * codegen'd built-ins.
@@ -186,14 +188,13 @@ object Dedup {
     // expansion consumers. Within-set pairs come from the ids array by
     // the posexplode+slice successor enumeration (the copurchaseEdges
     // form) instead of a self-join: identical (x.id < y.id) pairs.
-    val grouped = df.select(col(idCol).as("id"),
+    val grouped = Ops.materialize(df.select(col(idCol).as("id"),
         wordShingles(col(textCol), cfg.shingleN).as("sh"))
       .withColumn("fp", md5(to_json(array_sort(col("sh")))))
       .repartition(col("fp"))
       .groupBy(col("fp"))
       .agg(min(col("id")).as("rid"), sort_array(collect_list(col("id"))).as("ids"),
-        first(col("sh")).as("sh"))
-      .localCheckpoint(true)
+        first(col("sh")).as("sh")))
     val reps0 = grouped.select(col("fp"), col("rid"), col("sh"))
     // md5-seeded mode: numHashes independent salted md5 minima (the q371
     // signature, oracle-replayable) through the native kernel — the
@@ -232,17 +233,23 @@ object Dedup {
 
     val members = grouped.select(col("fp"), explode(col("ids")).as("id"))
     val cross = expandCross(verified, members, "jaccard")
-    // within-set pairs from the sorted ids array: slice(ids, i+2, n-i-1)
-    // enumerates exactly the successors of the i-th (0-based) element —
-    // the same id_a < id_b pairs the former self-join produced, at
-    // jaccard 1.0 (genuine duplicates, output-bounded)
-    val within = grouped.filter(size(col("ids")) >= 2)
+    cross.union(withinPairs(grouped, lit(1.0).as("jaccard")))
+  }
+
+  /** Within-set pairs of a dedup's distinct-set relation, from each set's
+    * sorted `ids` array: slice(ids, i+2, n-i-1) enumerates exactly the
+    * successors of the i-th (0-based) element, and equal successors are
+    * dropped — the same strict id_a < id_b pairs a self-join on
+    * `x.id < y.id` produces, so a duplicated id emits no self-pair. Every
+    * pair carries `metric`, the set's exact-duplicate score (genuine
+    * duplicates, output-bounded). */
+  private def withinPairs(grouped: DataFrame, metric: Column): DataFrame =
+    grouped.filter(size(col("ids")) >= 2)
       .select(posexplode(col("ids")).as(Seq("__i", "id_a")), col("ids"))
       .select(col("id_a"), explode(expr(
         "slice(ids, __i + 2, size(ids) - __i - 1)")).as("id_b"))
-      .select(col("id_a"), col("id_b"), lit(1.0).as("jaccard"))
-    cross.union(within)
-  }
+      .filter(col("id_a") =!= col("id_b"))
+      .select(col("id_a"), col("id_b"), metric)
 
   /** Cross-corpus near-dup pairs: documents of `corpus` that are MinHash
     * near-duplicates of any document in `reference` — fuzzy decontamination
@@ -339,12 +346,11 @@ object Dedup {
     // rows — for banding and expansion. Within-signature pairs enumerate
     // from the ids array (the copurchaseEdges posexplode+slice form) —
     // identical (x.id < y.id) pairs to the former self-join.
-    val grouped = df.select(col(idCol).as("id"),
+    val grouped = Ops.materialize(df.select(col(idCol).as("id"),
         simhashSig(col(textCol), md5Seeded).as("sh"))
       .repartition(col("sh"))
       .groupBy(col("sh"))
-      .agg(min(col("id")).as("rid"), sort_array(collect_list(col("id"))).as("ids"))
-      .localCheckpoint(true)
+      .agg(min(col("id")).as("rid"), sort_array(collect_list(col("id"))).as("ids")))
     val reps = grouped.select(col("sh"), col("rid"))
     val banded = reps.select(col("rid"), col("sh"),
         explode(simhashBandArray(col("sh"))).as("bb"))
@@ -362,12 +368,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
     val cross = expandCross(verified,
       grouped.select(col("sh").as("fp"), explode(col("ids")).as("id")), "hamming")
-    val within = grouped.filter(size(col("ids")) >= 2)
-      .select(posexplode(col("ids")).as(Seq("__i", "id_a")), col("ids"))
-      .select(col("id_a"), explode(expr(
-        "slice(ids, __i + 2, size(ids) - __i - 1)")).as("id_b"))
-      .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
-    cross.union(within)
+    cross.union(withinPairs(grouped, lit(0).as("hamming")))
   }
 
   /** 64-bit SimHash of whitespace tokens as one LongType column: bit b is
@@ -404,46 +405,19 @@ object Dedup {
     * LSH skew guard deliberately emits for capped buckets — converges in
     * ~20 rounds where plain propagation would need 10^6. Same hop-doubling
     * idea as GraphFrames' alternating-star CC. Lineage is cut per round
-    * with an eager checkpoint — an iterative fixed point cannot be one
-    * declarative plan. When `sc.setCheckpointDir` is configured the cut is
-    * a RELIABLE checkpoint (survives executor loss — the right mode for a
-    * long multi-round job on a real cluster); otherwise it falls back to
-    * localCheckpoint, which is faster but aborts the fixed point if an
-    * executor holding checkpointed blocks dies (acceptable in local mode /
-    * short jobs — rerun). Superseded rounds are reclaimed explicitly: the
-    * ContextCleaner only deletes RELIABLE checkpoint files when
-    * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
-    * false), so each round deletes the previous round's checkpoint
-    * directory once the new one is materialized — without this a long
-    * multi-round job writes the full label set per round and never
-    * reclaims checkpoint-dir space. (localCheckpoint blocks DO fall to the
-    * ContextCleaner as references drop.) At 100 TB each round is a plain
+    * with [[graft.operators.Ops.materialize]] — an iterative fixed point
+    * cannot be one declarative plan — and each round releases the
+    * previous round's cut. At 100 TB each round is a plain
     * keyed shuffle — no driver-side data beyond the convergence count. */
   def connectedComponents(pairs: DataFrame, srcCol: String = "id_a",
                           dstCol: String = "id_b", maxIter: Int = 50): DataFrame = {
-    // reliable checkpoint when a dir is configured (fault-tolerant on a
-    // cluster), local fallback otherwise — see scaladoc
-    val reliable = pairs.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-    // the reliable-checkpoint directory backing a cut() result (None for
-    // localCheckpoint), so superseded rounds can be deleted eagerly
-    def ckptDir(df: DataFrame): Option[org.apache.hadoop.fs.Path] =
-      df.queryExecution.analyzed.collectFirst {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.flatMap(_.getCheckpointFile).map(new org.apache.hadoop.fs.Path(_))
-    def reclaim(p: Option[org.apache.hadoop.fs.Path]): Unit = p.foreach { path =>
-      try path.getFileSystem(pairs.sparkSession.sessionState.newHadoopConf())
-        .delete(path, true)
-      catch { case _: java.io.IOException => () } // best-effort cleanup
-    }
     // materialize the symmetric edge list once — every propagation round
     // joins it, and without the checkpoint each round's action would
     // re-execute the whole upstream pair-generation pipeline
-    val sym = cut(pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val sym = Ops.materialize(pairs.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .union(pairs.select(col(dstCol).as("src"), col(srcCol).as("dst")))
       .distinct())
-    var labels = cut(sym.select(col("src").as("id")).distinct()
+    var labels = Ops.materialize(sym.select(col("src").as("id")).distinct()
       .withColumn("cluster", col("id")))
     var converged = false
     var i = 0
@@ -458,18 +432,15 @@ object Dedup {
       // label is still in scope pre-projection), so convergence is a
       // short-circuit scan of materialized blocks — not the extra
       // next-vs-labels join + full count an earlier version paid per round
-      val next = cut(labels
+      val next = Ops.materialize(labels
         .join(nbrMin, labels("id") === nbrMin("src"), "left")
         .join(jump, labels("id") === jump("jid"))
         .select(col("id"), col("cluster").as("old"),
           least(col("cluster"), coalesce(col("nbr"), col("cluster")),
             col("jcluster")).as("next_cluster"))
         .select(col("id"), col("next_cluster").as("cluster"),
-          (col("next_cluster") =!= col("old")).as("changed")))
+          (col("next_cluster") =!= col("old")).as("changed")), labels)
       converged = next.filter(col("changed")).isEmpty
-      // `next` is materialized (cut is eager): the previous round's reliable
-      // checkpoint is now superseded — reclaim its directory
-      if (reliable) reclaim(ckptDir(labels))
       labels = next.select(col("id"), col("cluster"))
       i += 1
     }

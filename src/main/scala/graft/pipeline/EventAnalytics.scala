@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ops
+
 /** Batch event analytics over (user, type, timestamp) logs: ordered funnels,
   * cohort retention, and event-type association rules — the product-analytics
   * companions to the streaming operators in [[graft.streaming.Streams]]
@@ -848,13 +850,12 @@ object EventAnalytics {
         count(lit(1)).as("frequency"),
         sum(col(amountCol).cast("decimal(38,6)")).cast("double").as("monetary"))
     val mx = perKey.agg(max(col("__last")).as("__mx"))
-    // materialize the per-key relation once (localCheckpoint): both the
-    // percentile aggregate and the bucket projection read it, and each
-    // reference would otherwise replay the transaction-log aggregate
-    val rec = perKey.crossJoin(broadcast(mx))
+    // materialize the per-key relation once: both the percentile
+    // aggregate and the bucket projection read it, and each reference
+    // would otherwise replay the transaction-log aggregate
+    val rec = Ops.materialize(perKey.crossJoin(broadcast(mx))
       .select(col("key"), (col("__mx") - col("__last")).as("recency"),
-        col("frequency"), col("monetary"))
-      .localCheckpoint(true)
+        col("frequency"), col("monetary")))
     val qs = Seq(0.25, 0.5, 0.75)
     def pct(c: String) = expr(s"percentile($c, array(${qs.mkString(", ")}))")
     val boundNames = for (d <- Seq("r", "f", "m"); i <- qs.indices) yield s"__$d$i"
@@ -1235,9 +1236,8 @@ object EventAnalytics {
     // distinct from scratch — for q185 that is three orders⋈lineitem
     // joins. The basket is the relation every stage shuffles anyway; one
     // materialization replaces three derivations.
-    val basket = df.select(col(userCol).as("__u"), col(itemCol).as("__i"))
-      .distinct()
-      .localCheckpoint(true)
+    val basket = Ops.materialize(
+      df.select(col(userCol).as("__u"), col(itemCol).as("__i")).distinct())
     val simsAll = cooccurrenceCosine(basket, "__u", "__i", minUsers, maxBasket)
     val sims = (if (minSim > 0.0) simsAll.filter(col("cosine") >= minSim)
       else simsAll)
@@ -2667,12 +2667,12 @@ object EventAnalytics {
     // the iterate lives at (variants × states) cardinality — single-digit
     // kilobytes however large the event log — so the whole loop runs as
     // ONE task per round: both fixed relations collapse to one partition
-    // and materialize once (localCheckpoint: an 8-round lineage of
-    // re-derived journey scans would otherwise re-run the log each round),
-    // and every round-side join broadcasts.
-    val transS = trans.repartition(1).localCheckpoint(true)
-    val spine = variants.crossJoin(broadcast(states))
-      .repartition(1).localCheckpoint(true)
+    // and materialize once (an 8-round lineage of re-derived journey
+    // scans would otherwise re-run the log each round), and every
+    // round-side join broadcasts.
+    val transS = Ops.materialize(trans.repartition(1))
+    val spine = Ops.materialize(variants.crossJoin(broadcast(states))
+      .repartition(1))
     var a = spine.withColumn("v",
       when(col("state") === "__conv", 1.0).otherwise(0.0))
     for (_ <- 1 to rounds) {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ops
+
 /** Join-iterated graph analytics — the rank companion to
   * [[Dedup.connectedComponents]]' pointer jumping. Each PageRank iteration
   * is one co-keyed join + aggregate over the edge relation (the classic
@@ -35,7 +37,7 @@ object Graph {
     // checkpoint discipline = connectedComponents': the edge relation
     // materializes ONCE (every round joins it), each round's rank cuts its
     // lineage — no ambiguous-self-join resolution, no replayed upstream
-    val e0 = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e0 = Ops.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
@@ -47,12 +49,13 @@ object Graph {
     // partitioning only added an exchange: 5.5 -> 7.0 s on q136; dropping
     // e0's eager cut also measured slower — its four consumers re-ran the
     // distinct's post-exchange agg: 3.2 -> 7.3 s.)
-    val e = cut(e0.join(deg, Seq("src")))
+    val e = Ops.materialize(e0.join(deg, Seq("src")))
     // one scalar row: N and the teleport term (3*10^12) div (20*N)
     val n = nodes.agg(count(lit(1)).as("__n"))
       .select(col("__n"), expr(s"(3 * ${Scale}L) div (20 * __n)").as("__tp"))
     var rank = nodes.crossJoin(broadcast(n))
       .select(col("node"), expr(s"${Scale}L div __n").as("r"))
+    var rankCut: Option[DataFrame] = None
     for (i <- 1 to iters) {
       // SHUFFLE_HASH on the rank side: ranks are |V| rows against |E|
       // edges — the default sort-merge would re-sort the edge relation
@@ -78,8 +81,11 @@ object Graph {
       // nested joins stay one job whose repeated e-exchanges collapse to
       // ReusedExchange and whose sizes AQE can see (an EAGER cut per round
       // serialized five jobs and erased the stats that let small rank
-      // relations broadcast)
-      if (i % 5 == 0 && i < iters) rank = cut(rank)
+      // relations broadcast); each cut supersedes the previous one
+      if (i % 5 == 0 && i < iters) {
+        rank = Ops.materialize(rank, rankCut.toSeq: _*)
+        rankCut = Some(rank)
+      }
     }
     rank.crossJoin(broadcast(n))
       .select(col("node"), col("r").as("rank_micro"),
@@ -102,12 +108,12 @@ object Graph {
                            seeds: DataFrame, seedCol: String,
                            iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
-    val e0 = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e0 = Ops.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
     val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e = cut(e0.join(deg, Seq("src")))
+    val e = Ops.materialize(e0.join(deg, Seq("src")))
     val seedNodes = nodes.join(
       broadcast(seeds.select(col(seedCol).as("node")).distinct()),
       Seq("node"), "semi")
@@ -121,6 +127,7 @@ object Graph {
       .select(col("node"), col("__isSeed"),
         when(col("__isSeed"), expr(s"${Scale}L div __ns"))
           .otherwise(lit(0L)).as("r"))
+    var rankCut: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val contrib = rank.hint("shuffle_hash")
         .join(e, rank("node") === e("src"))
@@ -134,7 +141,10 @@ object Graph {
         .select(col("node"), col("__isSeed"),
           (when(col("__isSeed"), col("__tp")).otherwise(lit(0L)) +
             expr("(17 * coalesce(__in, 0L)) div 20")).as("r"))
-      if (i % 5 == 0 && i < iters) rank = cut(rank)
+      if (i % 5 == 0 && i < iters) {
+        rank = Ops.materialize(rank, rankCut.toSeq: _*)
+        rankCut = Some(rank)
+      }
     }
     rank.select(col("node"), col("r").as("rank_micro"),
       round(col("r").cast("double") / lit(Scale.toDouble), 6).as("rank"))
@@ -162,16 +172,11 @@ object Graph {
     * all read this relation — without the cut each reference would replay
     * the caller's full upstream (e.g. a fact-table self-join) once per use. */
   private def canonEdges(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
-    cut(edges
+    Ops.materialize(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct())
-
-  private def cut(df: DataFrame): DataFrame = {
-    val reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined
-    if (reliable) df.checkpoint(true) else df.localCheckpoint(true)
-  }
 
   private def degrees(und: DataFrame): DataFrame =
     und.select(col("a").as("node"))
@@ -186,7 +191,7 @@ object Graph {
       .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
       .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
     val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    cut(withDeg.select(
+    Ops.materialize(withDeg.select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
       when(aFirst, col("db")).otherwise(col("da")).as("dv")))
@@ -263,9 +268,9 @@ object Graph {
     for (_ <- 1 to rounds) {
       val keep = degrees(und).filter(col("deg") >= k)
         .select(col("node"))
-      und = cut(und
+      und = Ops.materialize(und
         .join(keep.select(col("node").as("a")), Seq("a"), "semi")
-        .join(keep.select(col("node").as("b")), Seq("b"), "semi"))
+        .join(keep.select(col("node").as("b")), Seq("b"), "semi"), und)
     }
     // isolated survivors (deg dropped below k only in the FINAL degree
     // count) are by definition removed next round; report the final graph
@@ -287,7 +292,7 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 20, s"maxHops out of range: $maxHops")
     val und = canonEdges(edges, srcCol, dstCol)
     // both directions once, so a frontier expands with ONE equi join
-    val adj = cut(und.select(col("a").as("u"), col("b").as("v"))
+    val adj = Ops.materialize(und.select(col("a").as("u"), col("b").as("v"))
       .union(und.select(col("b").as("u"), col("a").as("v"))))
     var visited = seeds.select(col(seedCol).as("node")).distinct()
       .select(col("node"), lit(0).as("hops"))
@@ -297,10 +302,13 @@ object Graph {
         .join(adj, frontier("node") === adj("u"))
         .select(col("v").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "anti")
-      frontier = cut(next)
-      visited = cut(visited.unionByName(
-        frontier.select(col("node"), lit(h).as("hops"))))
+      // each round supersedes the previous frontier and visited set
+      // (round 1's are the lazy seed relations, not cuts)
+      frontier = Ops.materialize(next, frontier)
+      visited = Ops.materialize(visited.unionByName(
+        frontier.select(col("node"), lit(h).as("hops"))), visited)
     }
+    Ops.release(frontier) // the returned visited already holds it
     visited
   }
 
@@ -326,7 +334,7 @@ object Graph {
         col(weightCol).cast("long").as("w"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w"))
-    val adj = cut(e.select(col("a").as("u"), col("b").as("v"), col("w"))
+    val adj = Ops.materialize(e.select(col("a").as("u"), col("b").as("v"), col("w"))
       .union(e.select(col("b").as("u"), col("a").as("v"), col("w"))))
     var dist = seeds.select(col(seedCol).as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"))
@@ -338,8 +346,8 @@ object Graph {
         .groupBy("node").agg(min(col("dist")).as("dist"))
       // the last round stays un-checkpointed: the caller's action
       // materializes it anyway, and its plan (join shape, aggregate) stays
-      // inspectable
-      dist = if (r < rounds) cut(next) else next
+      // inspectable; a cut supersedes the previous round's
+      dist = if (r < rounds) Ops.materialize(next, dist) else next
     }
     dist
   }
@@ -368,7 +376,7 @@ object Graph {
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct()
-    val adj = cut(e.select(col("a").as("u"), col("b").as("v"))
+    val adj = Ops.materialize(e.select(col("a").as("u"), col("b").as("v"))
       .union(e.select(col("b").as("u"), col("a").as("v"))))
     var dist = seeds.select(col(seedCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
@@ -379,7 +387,7 @@ object Graph {
           (col("dist") + lit(1L)).as("dist"))
       val next = dist.unionByName(relaxed)
         .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-      dist = if (r < rounds) cut(next) else next
+      dist = if (r < rounds) Ops.materialize(next, dist) else next
     }
     dist.filter(col("dist") > 0)
       .groupBy("seed")
@@ -406,11 +414,12 @@ object Graph {
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
                        iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters out of range: $iters")
-    val e0 = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e0 = Ops.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct()
     var lab = nodes.withColumn("label", col("node"))
+    var labCut: Option[DataFrame] = None
     for (i <- 1 to iters) {
       val msgs = lab.hint("shuffle_hash").join(e0, lab("node") === e0("src"))
         .select(col("dst").as("node"), col("label"))
@@ -421,7 +430,10 @@ object Graph {
         .filter(col("__rn") === 1).select(col("node"), col("label"))
       lab = nodes.join(elect.hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"), coalesce(col("label"), col("node")).as("label"))
-      if (i % 3 == 0 && i < iters) lab = cut(lab)
+      if (i % 3 == 0 && i < iters) {
+        lab = Ops.materialize(lab, labCut.toSeq: _*)
+        labCut = Some(lab)
+      }
     }
     lab
   }
@@ -443,7 +455,7 @@ object Graph {
            iters: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     require(iters >= 1 && iters <= 5, s"iters out of range: $iters")
-    val e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val e = Ops.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
     // round 1 from h≡1: authority = in-degree
     var auth = e.groupBy(col("dst"))
@@ -628,8 +640,10 @@ object Graph {
     require(rounds >= 1 && rounds <= 10, s"rounds out of range: $rounds")
     var und = canonEdges(edges, srcCol, dstCol)
     var support: DataFrame = null
+    var supportCuts = Seq.empty[DataFrame] // the cuts `support` reads
     for (_ <- 1 to rounds) {
-      val tri = triCorners(orientedOf(und, degrees(und)))
+      val oriented = orientedOf(und, degrees(und))
+      val tri = triCorners(oriented)
       // every triangle supports its three canonical edges
       val edgeHits = tri.select(
           explode(array(
@@ -645,8 +659,13 @@ object Graph {
         .select(col("a"), col("b"),
           coalesce(col("support"), lit(0L)).as("support"))
         .filter(col("support") >= k - 2)
-      und = cut(support.select("a", "b"))
+      // the previous round's support is superseded, and with it the cuts
+      // only it read; the returned support reads this round's
+      val next = Ops.materialize(support.select("a", "b"), supportCuts: _*)
+      supportCuts = Seq(und, oriented)
+      und = next
     }
+    Ops.release(und) // the last round's edges feed no returned plan
     support
   }
 

@@ -667,11 +667,11 @@ object Similarity {
     * the all-ones vector (exact; converges to the dominant direction for
     * any v₀ not orthogonal to it).
     *
-    * Like connectedComponents, each round's d-row v MATERIALIZES via
-    * checkpoint (reliable when a checkpoint dir is configured, local
-    * otherwise): v appears twice in the next round's lineage (the s join
-    * and the norm), so without the cut the plan doubles per round —
-    * linear recompute is the price of a d-row write. Returns
+    * Like connectedComponents, each round's d-row v MATERIALIZES
+    * ([[graft.operators.Ops.materialize]]): v appears twice in the next
+    * round's lineage (the s join and the norm), so without the cut the
+    * plan doubles per round — linear recompute is the price of a d-row
+    * write. Returns
     * (dim [1-based], loading) with loading rounded 6dp. */
   def topPrincipalComponent(df: DataFrame, idCol: String, vecCol: String,
                             iters: Int = 3): DataFrame = {
@@ -680,10 +680,6 @@ object Similarity {
         posexplode(col(vecCol)).as(Seq("__d0", "__xf")))
       .select(col("__id"), (col("__d0") + 1).as("dim"),
         col("__xf").cast("double").as("__x"))
-    val reliable =
-      df.sparkSession.sparkContext.getCheckpointDir.isDefined
-    def cut(d: DataFrame): DataFrame =
-      if (reliable) d.checkpoint(true) else d.localCheckpoint(true)
     var v: DataFrame = x.select(col("dim")).distinct()
       .withColumn("__v", lit(1.0))
     for (i <- 1 to iters) {
@@ -701,8 +697,9 @@ object Similarity {
       val vNext = t.crossJoin(broadcast(nrm))
         .select(col("dim"), round(col("__t") / col("__n"), 12).as("__v"))
       // the final round stays lazy so the caller's plan composes; earlier
-      // rounds cut eagerly to keep lineage linear
-      v = if (i < iters) cut(vNext) else vNext
+      // rounds cut eagerly to keep lineage linear, each cut superseding
+      // the previous round's
+      v = if (i < iters) graft.operators.Ops.materialize(vNext, v) else vNext
     }
     v.select(col("dim"), round(col("__v"), 6).as("loading"))
   }

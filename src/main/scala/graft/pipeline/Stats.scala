@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.Ops
+
 /** Distribution analytics over large tables: quantile bucketing, per-group
   * standardization, and robust (median/MAD) outlier detection — the
   * data-quality companions to [[graft.operators.Ops.profile]] /
@@ -1861,7 +1863,7 @@ object Stats {
     * Bounded driver seams (the IVF-centroid discipline): the 1-row pivot
     * aggregate, the segment counts, and (massive ties only) the per-tie id
     * grids — all O(grid), never O(N). The slim input projection is
-    * localCheckpointed once and every pass reads the materialized copy.
+    * materialized once and every pass reads the stored copy.
     *
     * Contract: scoreCol numeric; idCol distinct non-null (ntile's
     * determinism tiebreak). Tie subdivision additionally needs the
@@ -1879,7 +1881,7 @@ object Stats {
     import spark.implicits._
     val sD = col(scoreCol).cast("double")
     val idD = col(idCol).cast("double")
-    val df = df0.localCheckpoint(true)
+    val df = Ops.materialize(df0)
     val ps = (1 until grid).map(i => i.toDouble / grid)
     // accuracy 2500: pivot error ~N/2500 is noise against the ~N/grid
     // rescue-window bound, and the sketch insert path is ~40% of the
@@ -2059,7 +2061,7 @@ object Stats {
     // blocking driver job per call — measured FLAT across three OptBench
     // runs of the 6-query rank family (11.47/11.08/11.48 s totals, noise
     // dominated); eager is the safer documented mode and stays.)
-    val slim = df0.select(slimCols.map(col): _*).localCheckpoint(true)
+    val slim = Ops.materialize(df0.select(slimCols.map(col): _*))
     // the final pass reuses the checkpointed slim when it already carries
     // every output column; otherwise it re-derives df0 (one extra scan of
     // a deterministic lineage — the contract above)
@@ -6953,8 +6955,7 @@ object Stats {
     * Returns one row: (n_a, n_b, z_w, z_ab, lepage) 6dp. */
   def lepageTest(df: DataFrame, groupCol: Column, valueCol: Column,
                  a: String, b: String): DataFrame = {
-    val cells = twoSampleRankCells(df, groupCol, valueCol, a, b)
-      .localCheckpoint(true)
+    val cells = Ops.materialize(twoSampleRankCells(df, groupCol, valueCol, a, b))
     val w = linearRankZ(cells, col("__r2"))
       .select(col("n_a"), col("n_b"), col("__z").as("__zw"))
     val ab = linearRankZ(cells, least(col("__r2"),

@@ -3492,10 +3492,10 @@ object StatsQueries2 {
         // relations, and the rake input) through broadcast-only lineage —
         // materialize the orders rollup once instead of once per broadcast
         // build (the rake duplicated-subtree fix, guide §7.2)
-        val cells = Tables.orders(s, dir)
+        val cells = Ops.materialize(Tables.orders(s, dir)
           .groupBy("o_orderpriority", "o_orderstatus")
           .agg(count(lit(1)).as("n"))
-          .repartition(1).localCheckpoint(true)
+          .repartition(1))
         val dims = cells.agg(
           (sum(col("n")).cast("double") /
             countDistinct(col("o_orderpriority")).cast("double")).as("rt"),

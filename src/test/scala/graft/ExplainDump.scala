@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Dump .explain("formatted") for every registered query (plan review
@@ -7,11 +6,7 @@ import graft.queries.Registry
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val out = new java.io.PrintWriter(args.headOption.getOrElse("/tmp/explains.txt"))
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for ((name, fn) <- Registry.queries.toSeq.sortBy(_._1)) {
       out.println(s"===== $name =====")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import graft.queries.Registry
 
 /** Dump .explain("formatted") for selected queries (plan artifacts).
@@ -9,11 +8,7 @@ object ExplainOne {
     val only = args(0).split(",").toSeq.filter(_.nonEmpty)
     val out = new java.io.PrintWriter(args(1))
     val sfDir = args.drop(2).headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     for ((name, fn) <- Registry.queries.toSeq.sortBy(_._1)
          if only.exists(name.contains)) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 testdata generator for SCALE evidence (not a CI test, not product
@@ -34,11 +34,7 @@ object GenSf1 {
 
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("testdata_sf1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SparkEntry.localSession("32").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val sf01 = args.lift(1).getOrElse("/root/testdata/sf0.1")
 

@@ -14,21 +14,58 @@ class OpsSpec extends SparkSpec {
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
     df.collect().toSeq.map(_.toSeq)
 
-  test("fanoutScan widens a starved single-split scan, respects the conf, is a no-op on parallel inputs") {
+  test("fanoutScan widens a starved scan, is a no-op at >= cores/2 partitions") {
     val scan = Tables.load(spark, sf0001, "documents")
+    val cores = spark.sparkContext.defaultParallelism
     assert(scan.rdd.getNumPartitions == 1, "fixture: single-row-group file")
     val fanned = Ops.fanoutScan(scan)
-    assert(fanned.rdd.getNumPartitions ==
-      spark.sparkContext.defaultParallelism)
+    assert(fanned.rdd.getNumPartitions == cores)
     // row multiset unchanged (the exchange moves rows, never keys them)
     assert(fanned.count() == scan.count())
-    // already-parallel input passes through untouched
-    val wide = scan.repartition(spark.sparkContext.defaultParallelism * 2)
-    assert(Ops.fanoutScan(wide) eq wide)
-    // conf gate
-    spark.conf.set("spark.graft.scan.fanout", "false")
-    try assert(Ops.fanoutScan(scan) eq scan)
-    finally spark.conf.unset("spark.graft.scan.fanout")
+    // input already at cores/2 partitions passes through untouched
+    val half = scan.repartition(cores / 2)
+    assert(Ops.fanoutScan(half) eq half)
+    assert(Ops.fanoutScanBy(half, col("doc_id")) eq half)
+  }
+
+  test("materialize: a local cut without a checkpoint dir, a reliable one with it; release") {
+    def cutFiles(dir: java.nio.file.Path): Long =
+      java.nio.file.Files.walk(dir).filter(java.nio.file.Files.isRegularFile(_)).count()
+    val df = spark.range(100).selectExpr("id", "id * 2 AS x")
+    assert(spark.sparkContext.getCheckpointDir.isEmpty)
+    val local = Ops.materialize(df)
+    assert(local.queryExecution.analyzed.isInstanceOf[
+      org.apache.spark.sql.execution.LogicalRDD])
+    assert(local.agg(sum("x")).head().getLong(0) == 9900L)
+    withCheckpointDir { dir =>
+      // the local cut made before the dir was set wrote nothing there, and
+      // releasing it is a no-op
+      Ops.release(local)
+      assert(cutFiles(dir) == 0)
+      assert(local.count() == 100)
+      val reliable = Ops.materialize(df)
+      assert(cutFiles(dir) > 0, "a reliable cut writes under the dir")
+      assert(reliable.agg(sum("x")).head().getLong(0) == 9900L)
+      // a projection of the cut resolves to the same directory
+      Ops.release(reliable.select("x"))
+      assert(cutFiles(dir) == 0, "release deletes the cut's files")
+    }
+  }
+
+  test("one lineage-cut primitive: no checkpoint call in src/main outside Ops.materialize") {
+    val calls = Seq("localCheckpoint(", ".checkpoint(")
+    val sources = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+      .filter(_.toString.endsWith(".scala")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path])
+    assert(sources.size > 50, "src/main sources found")
+    val hits = for {
+      f <- sources
+      (line, i) <- java.nio.file.Files.readAllLines(f).toArray.toSeq
+        .map(_.toString).zipWithIndex
+      c <- calls if line.contains(c)
+    } yield (f.getFileName.toString, i + 1, c)
+    assert(hits.map(h => (h._1, h._3)).sorted ==
+      calls.map(c => ("Ops.scala", c)).sorted, hits.mkString("\n"))
   }
 
   test("cut selects, excludes, prunes (process.py:901-934)") {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Repeat-timing harness for optimization A/Bs on a noisy host (not a test).
   * Runs each selected query `reps` times in one session and reports the MIN
   * (noise floor) and median. Usage:
@@ -15,12 +13,7 @@ object OptBench {
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(3)
     val sfDir = args.drop(2).headOption.getOrElse("/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    var b = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    var b = SparkEntry.localSession(cpus)
     for (kv <- sys.env.get("GRAFT_CONF").toSeq.flatMap(_.split(",")); if kv.contains("=")) {
       val Array(k, v) = kv.split("=", 2)
       b = b.config(k, v)

@@ -121,6 +121,17 @@ class PipelineSpec extends SparkSpec {
     assert(cluster.forall(_.getDouble(2) == 1.0))
   }
 
+  test("minhash/simhash within-set pairs: a duplicated id emits no self-pair") {
+    // ids [5, 5, 7] share one text, so one fingerprint: the strict
+    // x.id < y.id rule pairs each 5 with the 7, and never 5 with itself
+    val text = "the same short document text under one fingerprint for all rows"
+    val df = Seq((5L, text), (5L, text), (7L, text)).toDF("doc_id", "text")
+    def pairs(out: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    assert(pairs(Dedup.minhashDedup(df, "doc_id", "text")) == Seq((5L, 7L), (5L, 7L)))
+    assert(pairs(Dedup.simhashDedup(df, "doc_id", "text")) == Seq((5L, 7L), (5L, 7L)))
+  }
+
   test("keepBestPerCluster elects max score with min-id ties; unscored members drop") {
     // chain {1,2,3} (scores 5,9,9 -> keep 2: max score, tie to lower id);
     // pair {10,11} (equal scores -> keep 10); pair {20,21} where 21 has no
@@ -191,23 +202,18 @@ class PipelineSpec extends SparkSpec {
   test("connectedComponents uses reliable checkpoints when a checkpoint dir is set") {
     // with sc.setCheckpointDir configured the per-round lineage cut is a
     // fault-tolerant checkpoint (survives executor loss); results identical
-    // NOTE: SparkContext has no unset API, so the shared test session keeps
-    // this dir for the rest of the JVM — harmless (later CC calls become
-    // reliable-checkpointed too, same results, tmp-dir cost only)
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val sc = spark.sparkContext
-    sc.setCheckpointDir(dir)
-    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponents(pairs).orderBy("id").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-    assert(got.toSeq == Seq(
-      (1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
-      (10L, 10L, true), (11L, 10L, false)))
-    // reliable checkpoints actually landed on disk
-    val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(sc.getCheckpointDir.get
-      .stripPrefix("file:")))
-      .filter(java.nio.file.Files.isRegularFile(_)).count()
-    assert(wrote > 0, "expected reliable checkpoint files under the configured dir")
+    withCheckpointDir { dir =>
+      val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+      val got = Dedup.connectedComponents(pairs).orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+      assert(got.toSeq == Seq(
+        (1L, 1L, true), (2L, 1L, false), (3L, 1L, false),
+        (10L, 10L, true), (11L, 10L, false)))
+      // reliable checkpoints actually landed on disk
+      val wrote = java.nio.file.Files.walk(dir)
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(wrote > 0, "expected reliable checkpoint files under the configured dir")
+    }
   }
 
   test("connectedComponents converges on a long chain (pointer jumping, O(log d) rounds)") {

@@ -8,19 +8,22 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
   val sf001 = "/root/testdata/sf0.01"
+
+  /** Runs `f` with a fresh checkpoint dir set, so every lineage cut inside
+    * is a reliable checkpoint, then unsets it: the shared session goes
+    * back to local cuts for the suites that follow. */
+  def withCheckpointDir[T](f: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try f(dir) finally spark.sparkContext.setCheckpointDir(null)
+  }
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val session: SparkSession = SparkEntry.localSession("4")
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // events.parquet is TIMESTAMP(NANOS); see Tables.events
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     // bucketed-table specs (BucketingSpec) save to the session catalog;
     // keep the warehouse out of the repo tree
     .config("spark.sql.warehouse.dir", s"/tmp/graft-test-warehouse-${sys.props.getOrElse("user.name", "u")}")
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 }
