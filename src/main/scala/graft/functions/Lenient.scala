@@ -8,8 +8,13 @@ import org.apache.spark.sql.types._
   * meza/fntools.py): currency/thousand-separator stripping, word-list bools,
   * zero-default on unparseable input (or error when `warn`).
   *
-  * All composed from built-in codegen'd functions — no UDFs, so these stay
-  * inside whole-stage codegen and cost nothing extra at 100 TB.
+  * Composed from built-in codegen'd functions — no UDFs — except `toInt` and
+  * `toFloat`: they run every numeric cell of meza's ingest path, so they read
+  * plain numbers in one byte scan (`LenientNumber`) and keep this chain of
+  * built-ins only for the strings the scan does not recognise. The price is
+  * paid on misses: a `toFloat` column of mostly unrecognised numbers (16+
+  * digits, padded, exponents) casts slower than the chain alone
+  * (`LenientNumber` says by how much).
   */
 object Lenient {
 
@@ -23,11 +28,18 @@ object Lenient {
   /** fntools.strip (fntools.py:426-451): drop currency symbols + thousand
     * separators, normalize the decimal separator to '.'. */
   def stripNum(c: Column, thousandSep: String = ",", decimalSep: String = "."): Column = {
-    val noCur = translate(c, Currencies, "")
-    val noThou = regexp_replace(noCur, java.util.regex.Pattern.quote(thousandSep), "")
+    // a one-char separator goes in the same translate as the currencies
+    val noThou =
+      if (singleChar(thousandSep)) translate(c, Currencies + thousandSep, "")
+      else regexp_replace(translate(c, Currencies, ""),
+        java.util.regex.Pattern.quote(thousandSep), "")
     if (decimalSep == ".") noThou
     else regexp_replace(noThou, java.util.regex.Pattern.quote(decimalSep), ".")
   }
+
+  /** One BMP char: a separator `translate` (and the scan kernel) can take. */
+  private[functions] def singleChar(sep: String): Boolean =
+    sep.length == 1 && !Character.isSurrogate(sep.charAt(0))
 
   /** fntools.is_numeric (fntools.py:454-496) incl. the leading-zero rule:
     * "0123" is not numeric (a zero-padded code, not a number), but "0",
@@ -70,7 +82,13 @@ object Lenient {
   /** convert.to_int (convert.py:160-208): int(float(strip(x))) — truncates
     * toward zero; 0 on failure ('spam' -> 0) unless warn. */
   def toInt(c: Column, thousandSep: String = ",", decimalSep: String = ".",
-            warn: Boolean = false): Column = {
+            warn: Boolean = false): Column =
+    LenientNumber.column(c, toIntChain(c, thousandSep, decimalSep, warn),
+      integral = true, warn, thousandSep, decimalSep)
+
+  /** `toInt` as the chain of built-ins: the scan kernel's fallback. */
+  private[functions] def toIntChain(c: Column, thousandSep: String, decimalSep: String,
+                                    warn: Boolean): Column = {
     val f = stripNum(c, thousandSep, decimalSep).try_cast(DoubleType)
     val truncated = f.cast(LongType) // double->long truncates toward zero
     if (warn) {
@@ -82,7 +100,13 @@ object Lenient {
 
   /** convert.to_float (convert.py:211-252). */
   def toFloat(c: Column, thousandSep: String = ",", decimalSep: String = ".",
-              warn: Boolean = false): Column = {
+              warn: Boolean = false): Column =
+    LenientNumber.column(c, toFloatChain(c, thousandSep, decimalSep, warn),
+      integral = false, warn, thousandSep, decimalSep)
+
+  /** `toFloat` as the chain of built-ins: the scan kernel's fallback. */
+  private[functions] def toFloatChain(c: Column, thousandSep: String, decimalSep: String,
+                                      warn: Boolean): Column = {
     val f = stripNum(c, thousandSep, decimalSep).try_cast(DoubleType)
     val ok = isNumeric(c, thousandSep, decimalSep)
     if (warn) when(ok, f).otherwise(

@@ -50,9 +50,4 @@ object StringFns {
     "application/vnd.openxmlformats-officedocument.spreadsheetml.sheet" -> "xlsx",
     "application/geo+json" -> "geojson",
     "application/octet-stream" -> "bin")
-
-  /** typetools field-name priors, exposed (guess_type_by_field,
-    * typetools.py:36-81) — delegates to the inference implementation. */
-  def guessTypeByField(name: String): String =
-    graft.types.DetectTypes.guessByField(name)
 }

@@ -36,9 +36,6 @@ object Readers {
       lastRow: Int = 0, // negative k => drop last k rows
       firstCol: Int = 0)
 
-  /** S1 read_csv (io.py:763-850). Fast path when no row/col window is
-    * requested; windowed path otherwise. Returns all-string columns (typing
-    * belongs to DetectTypes.typeCast — same split as the reference). */
   /** Charsets safe on Spark's native CSV line splitter. UTF-16/32 mis-align
     * on Hadoop's byte-based newline scan (bytes of multi-byte chars straddle
     * the split) and windows-1252 isn't accepted at all — those take the
@@ -46,6 +43,9 @@ object Readers {
     * in-process Reencoder io.py:183-285). */
   private val sparkCsvCharsets = Set("utf-8", "us-ascii", "iso-8859-1")
 
+  /** S1 read_csv (io.py:763-850). Fast path when no row/col window is
+    * requested; windowed path otherwise. Returns all-string columns (typing
+    * belongs to DetectTypes.typeCast — same split as the reference). */
   def csv(spark: SparkSession, path: String, opts: CsvOptions = CsvOptions()): DataFrame = {
     val enc = opts.encoding.getOrElse(Encoding.detect(path))
     if (opts.firstRow == 0 && opts.lastRow == 0 && opts.firstCol == 0 &&

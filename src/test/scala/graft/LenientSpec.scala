@@ -44,6 +44,30 @@ class LenientSpec extends SparkSpec {
     assert(one[Double](Lenient.toFloat(x), "00") == 0.0)
   }
 
+  test("to_int/to_float boundaries: signs around currency, -0, leading zeros, 15/16 digits") {
+    def int(v: String, warn: Boolean = false) = one[Long](Lenient.toInt(x, warn = warn), v)
+    def float(v: String, warn: Boolean = false) = one[Double](Lenient.toFloat(x, warn = warn), v)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    for (v <- Seq("-$5", "$-5")) { assert(int(v) == -5L); assert(float(v) == -5.0) }
+    for (v <- Seq("-0", "-0.0")) {
+      assert(int(v) == 0L)
+      assert(bits(float(v)) == bits(-0.0), v) // float('-0') keeps its sign
+    }
+    assert(int("0123") == 123L)
+    assert(bits(float("0123")) == bits(0.0))
+    assert(int("00") == 0L && bits(float("00")) == bits(0.0))
+    assert(int("£1,234.50") == 1234L && float("£1,234.50") == 1234.5)
+    assert(int("123€") == 123L && float("123€") == 123.0)
+    assert(int("123456789012345") == 123456789012345L)
+    assert(float("123456789012345") == 1.23456789012345e14)
+    assert(int("1234567890123456") == 1234567890123456L)
+    assert(float("1234567890123456") == 1.234567890123456e15)
+    assert(int("1.999999999999999") == 1L && float("1.999999999999999") == 1.999999999999999)
+    assert(int("-0", warn = true) == 0L && int("1.00", warn = true) == 1L)
+    assert(float("-$5", warn = true) == -5.0)
+    intercept[Exception](float("0123", warn = true))
+  }
+
   test("to_decimal HALF_UP / HALF_DOWN quantization (convert.py:255-313)") {
     def dec(v: String, roundup: Boolean = true): String =
       one[java.math.BigDecimal](Lenient.toDecimal(x, 2, roundup), v).toPlainString

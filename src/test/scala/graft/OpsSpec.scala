@@ -192,6 +192,42 @@ class OpsSpec extends SparkSpec {
     assert(out.filter(col("c").isNull).count() == 1)
   }
 
+  test("headRows keeps the first n rows in input order (io.py:456-479 first_row/islice)") {
+    val df = spark.range(0, 10, 1, 1).toDF("x")
+    assert(Ops.headRows(df, 3).as[Long].collect().toSeq == Seq(0L, 1L, 2L))
+    // islice past the end yields everything; n = 0 nothing
+    assert(Ops.headRows(df, 20).count() == 10)
+    assert(Ops.headRows(df, 0).count() == 0)
+  }
+
+  test("groupCollect gathers each group's whole records, sorted on request (aggregator=list)") {
+    val df = Seq(("a", 2, "y"), ("b", 1, "z"), ("a", 1, "x"), ("a", 3, "w")).toDF("k", "v", "s")
+    val got = Ops.groupCollect(df, Seq("k"), sortWithin = Seq("v")).collect()
+      .map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1)
+        .map(x => (x.getString(0), x.getInt(1), x.getString(2)))).toMap
+    assert(got == Map(
+      "a" -> Seq(("a", 1, "x"), ("a", 2, "y"), ("a", 3, "w")),
+      "b" -> Seq(("b", 1, "z"))))
+    // unsorted: the same records per group, order unspecified
+    val loose = Ops.groupCollect(df, Seq("k")).collect()
+      .map(r => r.getString(0) -> r.getSeq[org.apache.spark.sql.Row](1).map(_.getInt(1)).toSet).toMap
+    assert(loose == Map("a" -> Set(1, 2, 3), "b" -> Set(1)))
+  }
+
+  test("splitWrite writes one dir per key and bounded chunks (process.py:937-971)") {
+    val df = Seq(("a", 1), ("a", 2), ("a", 3), ("b", 4)).toDF("k", "v").repartition(1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-split").toString
+    Ops.splitWrite(df, dir, key = Some("k"), maxRecordsPerFile = Some(2L))
+    def parts(sub: String) = new java.io.File(dir, sub).listFiles()
+      .count(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(parts("k=a") == 2 && parts("k=b") == 1)
+    val back = spark.read.parquet(dir).select("k", "v").as[(String, Int)].collect().toSet
+    assert(back == Set(("a", 1), ("a", 2), ("a", 3), ("b", 4)))
+    // no key: one flat dataset, overwritten in place
+    Ops.splitWrite(df.filter($"v" > 2), dir)
+    assert(spark.read.parquet(dir).select("v").as[Int].collect().toSet == Set(3, 4))
+  }
+
   test("dropTail drops last k under explicit order (io.py:469-479)") {
     val df = Seq(1, 2, 3, 4, 5).toDF("x")
     assert(Ops.dropTail(df, 2, Seq("x")).as[Int].collect().toSet == Set(1, 2, 3))

@@ -74,6 +74,18 @@ class StatsSpec extends SparkSpec {
     assert(math.abs(r.getAs[Double]("pmi") - want) < 1e-6)
   }
 
+  test("rollingFingerprint: min xxhash64 over k-shingles of the normalized text") {
+    val df = Seq("abcde", "  ABCDE ", "ab", "abXde").toDF("text")
+    val got = df.select(TA.rollingFingerprint(col("text"), k = 3)).as[Long].collect()
+    val want = spark.range(1).select(
+      least(xxhash64(lit("abc")), xxhash64(lit("bcd")), xxhash64(lit("cde"))),
+      xxhash64(lit("ab"))).as[(Long, Long)].head()
+    assert(got(0) == want._1)
+    assert(got(1) == got(0)) // case and surrounding blanks normalize away
+    assert(got(2) == want._2) // shorter than k: the one shingle is the text
+    assert(got(3) != got(0))
+  }
+
   test("budgetedMixtureSample: under-budget groups keep everything, rates scale with share") {
     val df = (1 to 400).map(i => (i.toLong, if (i <= 200) "big" else "small", 10))
       .toDF("id", "src", "w")
