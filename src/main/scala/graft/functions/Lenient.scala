@@ -90,10 +90,12 @@ object Lenient {
   private[functions] def toIntChain(c: Column, thousandSep: String, decimalSep: String,
                                     warn: Boolean): Column = {
     val f = stripNum(c, thousandSep, decimalSep).try_cast(DoubleType)
-    val truncated = f.cast(LongType) // double->long truncates toward zero
+    // double->long truncates toward zero; beyond the BIGINT range it is null
+    // under ANSI on or off, so non-warn mode gives its 0 and never raises
+    val truncated = f.try_cast(LongType)
     if (warn) {
       // warn mode demands a *true int* (is_int), not a truncatable float
-      when(isIntCol(c, thousandSep, decimalSep), truncated)
+      when(isIntCol(c, thousandSep, decimalSep) && truncated.isNotNull, truncated)
         .otherwise(raise_error(concat(lit("Invalid int value: `"), c, lit("`."))))
     } else coalesce(truncated, lit(0L))
   }

@@ -3,6 +3,10 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.SparkSession
+
 /** Charset sniffing for text sources (reference: io.detect_encoding
   * io.py:1579-1614, Reencoder io.py:183-285). A small driver-side sniff of
   * the file head feeds Spark's `encoding` reader option — the distributed
@@ -13,9 +17,29 @@ import java.nio.file.{Files, Paths}
   */
 object Encoding {
 
-  /** Detect charset from BOM / byte patterns of the first `sniffBytes`. */
-  def detect(path: String, sniffBytes: Int = 4096): String = {
-    val in = Files.newInputStream(Paths.get(path))
+  /** Detect charset from BOM / byte patterns of the first `sniffBytes` of
+    * `path` — a file, a directory or a glob, on any Hadoop file system — read
+    * with the active session's Hadoop configuration. */
+  def detect(path: String, sniffBytes: Int = 4096): String =
+    sniff(path, SparkSession.getActiveSession
+      .fold(new Configuration())(_.sparkContext.hadoopConfiguration), sniffBytes)
+
+  /** [[detect]] through the Hadoop `FileSystem`, as Spark's readers open
+    * `path`. A directory or glob sniffs its first data file: sorted by path,
+    * depth first, skipping names that start with `_` or `.` (Spark's own
+    * listing skips those too, e.g. `_SUCCESS`) and empty files. */
+  private[sources] def sniff(path: String, conf: Configuration, sniffBytes: Int = 4096): String = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(s: FileStatus) = Seq("_", ".").exists(s.getPath.getName.startsWith)
+    def firstFile(ss: Seq[FileStatus]): Option[FileStatus] =
+      ss.sortBy(_.getPath.toString).iterator.flatMap { s =>
+        if (s.isDirectory) firstFile(fs.listStatus(s.getPath).toSeq.filterNot(hidden))
+        else Some(s).filter(_.getLen > 0)
+      }.nextOption()
+    val file = firstFile(Option(fs.globStatus(p)).toSeq.flatten)
+      .getOrElse(throw new java.io.FileNotFoundException(s"no data file at $path"))
+    val in = fs.open(file.getPath)
     val head = try in.readNBytes(sniffBytes) finally in.close()
     detectBytes(head)
   }

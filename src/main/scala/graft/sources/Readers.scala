@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.univocity.parsers.csv.{CsvParser, CsvParserSettings}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CsvLineFormat
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.Ops
@@ -18,6 +19,24 @@ import graft.operators.Ops
   *   - *Eager tier* (yaml/html/xml/xlsx): driver-side parse of small files
   *     into a DataFrame — exactly the formats the reference itself
   *     materializes eagerly (README.rst:579), never big-data formats.
+  *
+  * CSV in the scalable tier reads through `CsvLineFormat`: Spark's CSV
+  * source (header inference, splits, pruning, the per-file header and the
+  * blank-line filter) with a byte-scan tokenizer per line. A line takes the
+  * byte scan when it is valid UTF-8 without a leading BOM or NUL and splits
+  * into exactly as many fields as the header, with no quote or escape byte
+  * in an unquoted field, none inside a quoted one, and a closing quote that
+  * ends the line or meets the delimiter; its fields are copied from the
+  * line's bytes, an empty one as null. Every other line — ragged, `""` or
+  * `\"` inside quotes, a stray quote, text after a closing quote, invalid
+  * UTF-8 — falls back to Spark's own univocity parser, so its row is
+  * Spark's. A read with another charset than UTF-8/US-ASCII, a multi-char
+  * delimiter, multiLine or a comment char is Spark's reader unchanged. A
+  * miss costs the scan up to the byte that rejects it: a 45 MB, 500k-line
+  * file whose every line carries `\"` read 2–3% slower than with Spark's
+  * reader alone (medians 0.68–0.74 s → 0.69–0.76 s to the `noop` sink,
+  * `local[3]`, 4 vCPUs), where the same file without the `\"` read in
+  * 0.28 s instead of 0.57–0.67 s.
   *
   * Row-window options (`firstRow`/`lastRow`/`firstCol`) imply an ordered
   * file — inherently single-file semantics (reference: io.py:456-502) — and
@@ -47,7 +66,7 @@ object Readers {
     * requested; windowed path otherwise. Returns all-string columns (typing
     * belongs to DetectTypes.typeCast — same split as the reference). */
   def csv(spark: SparkSession, path: String, opts: CsvOptions = CsvOptions()): DataFrame = {
-    val enc = opts.encoding.getOrElse(Encoding.detect(path))
+    val enc = opts.encoding.getOrElse(Encoding.sniff(path, spark.sparkContext.hadoopConfiguration))
     if (opts.firstRow == 0 && opts.lastRow == 0 && opts.firstCol == 0 &&
         sparkCsvCharsets.contains(enc.toLowerCase)) {
       var r = spark.read
@@ -56,7 +75,7 @@ object Readers {
         .option("quote", opts.quote.toString)
         .option("encoding", enc)
         .option("mode", "PERMISSIVE")
-      val df0 = r.csv(path)
+      val df0 = r.format(classOf[CsvLineFormat].getName).load(path)
       // a trailing empty header cell surfaces as a positional _cN name:
       // the reference drops such columns entirely (golden: test.csv -> 4 cols)
       val df1 =

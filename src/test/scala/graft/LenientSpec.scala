@@ -68,6 +68,22 @@ class LenientSpec extends SparkSpec {
     intercept[Exception](float("0123", warn = true))
   }
 
+  test("to_int beyond the BIGINT range: 0 without warn, ANSI on or off; warn raises Invalid int") {
+    val big = Seq("-289614,38287194892475510", "99999999999999999999", "-1" + "0" * 30)
+    val key = "spark.sql.ansi.enabled"
+    val before = spark.conf.getOption(key)
+    try for (ansi <- Seq("true", "false")) {
+      spark.conf.set(key, ansi)
+      for (v <- big) assert(one[Long](Lenient.toInt(x), v) == 0L, s"$v ansi=$ansi")
+      assert(one[Long](Lenient.toInt(x), "9,000,000,000,000,000,000") == 9000000000000000000L)
+      for (v <- big) {
+        val e = intercept[Exception](
+          Seq(v).toDF("x").select(Lenient.toInt(x, warn = true)).collect())
+        assert(e.getMessage.contains(s"Invalid int value: `$v`"), s"$v ansi=$ansi: ${e.getMessage}")
+      }
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("to_decimal HALF_UP / HALF_DOWN quantization (convert.py:255-313)") {
     def dec(v: String, roundup: Boolean = true): String =
       one[java.math.BigDecimal](Lenient.toDecimal(x, 2, roundup), v).toPlainString

@@ -160,6 +160,22 @@ class ReadersSpec extends SparkSpec {
     assert(again.collect().map(key).toSet == df.collect().map(key).toSet)
   }
 
+  test("read_csv reads back a Writers.csv directory, a part-* glob and a file: URI") {
+    import spark.implicits._
+    val df = Seq[(String, String, String)](("1", "plain", "Ādam"), ("2", "with, comma", null),
+      ("3", "say \"hi\"", "x"), ("4", null, "tail"), ("5", "a\\b", "y"))
+      .toDF("id", "text", "more").repartition(3)
+    val dir = java.nio.file.Files.createTempDirectory("graft-csv-rt").resolve("out").toString
+    Writers.csv(df, dir)
+    val want = df.collect().toSet
+    for (p <- Seq(dir, s"$dir/part-*", new java.io.File(dir).toURI.toString)) {
+      val back = Readers.csv(spark, p)
+      assert(back.columns.toSeq == Seq("id", "text", "more"), p)
+      assert(back.count() == 5, p) // one header per part file, each dropped
+      assert(back.collect().toSet == want, p)
+    }
+  }
+
   test("read facade dispatches by extension; join concats ragged files (io.py:1617-1722)") {
     val a = Readers.read(spark, s"$fx/no_header_row.csv").columns.length // header=true default eats row 1
     assert(a == 3)
