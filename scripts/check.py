@@ -54,6 +54,29 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def dtype_diffs(g: pd.DataFrame, w: pd.DataFrame) -> list:
+    """(column, dtype of g, dtype of w) for every column whose dtypes differ."""
+    return [(c, str(g[c].dtype), str(w[c].dtype))
+            for c in g.columns if str(g[c].dtype) != str(w[c].dtype)]
+
+
+def float_bit_diffs(g: pd.DataFrame, w: pd.DataFrame) -> list:
+    """(column, "signbit" or "nan-pattern") for every float column whose
+    sign bits or NaN positions differ. assert_frame_equal treats -0.0 == 0.0
+    and NaN == NaN as equal; a byte-level result hash does not."""
+    diffs = []
+    for c in g.columns:
+        if str(g[c].dtype).startswith("float") and \
+                str(w[c].dtype).startswith("float"):
+            gv = g[c].to_numpy(dtype="float64")
+            wv = w[c].to_numpy(dtype="float64")
+            if not np.array_equal(np.signbit(gv), np.signbit(wv)):
+                diffs.append((c, "signbit"))
+            if not np.array_equal(np.isnan(gv), np.isnan(wv)):
+                diffs.append((c, "nan-pattern"))
+    return diffs
+
+
 def main() -> int:
     con = duckdb.connect()
     for t in TABLES:
@@ -92,23 +115,9 @@ def main() -> int:
             print(f"FAIL  {name}: rows {len(g)} vs {len(w)}")
             n_fail += 1
             continue
-        dtype_diff = [(c, str(g[c].dtype), str(w[c].dtype))
-                      for c in g.columns if str(g[c].dtype) != str(w[c].dtype)]
+        dtype_diff = dtype_diffs(g, w)
         strict = os.environ.get("STRICT_DTYPE") == "1"
-        # assert_frame_equal treats -0.0 == 0.0 and NaN == NaN as equal;
-        # the driver's byte-level hash does not. Compare signbit and the
-        # NaN pattern explicitly on every float column in strict mode.
-        bit_diff = []
-        if strict:
-            for c in g.columns:
-                if str(g[c].dtype).startswith("float") and \
-                        str(w[c].dtype).startswith("float"):
-                    gv = g[c].to_numpy(dtype="float64")
-                    wv = w[c].to_numpy(dtype="float64")
-                    if not np.array_equal(np.signbit(gv), np.signbit(wv)):
-                        bit_diff.append((c, "signbit"))
-                    if not np.array_equal(np.isnan(gv), np.isnan(wv)):
-                        bit_diff.append((c, "nan-pattern"))
+        bit_diff = float_bit_diffs(g, w) if strict else []
         try:
             pd.testing.assert_frame_equal(g, w, check_dtype=False,
                                           check_exact=True)

@@ -289,34 +289,26 @@ object Stats {
   /** Kolmogorov–Smirnov two-sample D between the `valueCol` distributions of
     * groups `a` and `b` of `groupCol`: D = max_v |F_a(v) − F_b(v)| — the
     * drift check between two sources/shards/time-slices before they mix.
-    * The ECDFs live on the AGGREGATED distinct-value relation (one count
-    * pass, then a cumulative window bounded by the value vocabulary — the
-    * Gini discipline: never the corpus; ENFORCED — above 10⁵ distinct
-    * values [[gateValueCells]] RAISES naming the bucketing remedy), and
+    * The ECDFs live on the gated two-sample value cells
+    * ([[twoSampleCells]]: one count pass, then a cumulative window bounded
+    * by the value vocabulary — the Gini discipline: never the corpus), and
     * the max runs on integer
     * cross-multiplied counts |cumA·n_b − cumB·n_a| summed as DECIMAL so the
     * comparison is exact at any count; ONE double division finishes,
     * rounded 6dp. Returns one row: (n_a, n_b, ks). */
   def ksTwoSample(df: DataFrame, groupCol: String, valueCol: String,
                   a: String, b: String): DataFrame = {
-    val v = col(valueCol)
-    val raw = df.filter(col(groupCol).isin(a, b) && v.isNotNull)
-      .groupBy(v.as("__v"))
-      .agg(sum(when(col(groupCol) === a, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === b, 1L).otherwise(0L)).as("__cb"))
-    val cells = gateValueCells(raw, "__ca", "ksTwoSample")
+    val (cells, tot) = twoSampleCells(
+      df.filter(col(groupCol).isin(a, b) && col(valueCol).isNotNull),
+      col(groupCol), col(valueCol), a, b, "ksTwoSample")
     val w = Window.orderBy(col("__v"))
     val cum = cells.select(
       sum(col("__ca")).over(w).as("__fa"),
       sum(col("__cb")).over(w).as("__fb"))
-    // 1-row totals read the UNGATED rollup: a combinable sum is safe at
-    // any cardinality, and the windowed path stays gated — this avoids a
-    // second lazy re-evaluation of the gate's own count
-    val tot = raw.agg(sum(col("__ca")).as("__na"), sum(col("__cb")).as("__nb"))
     cum.crossJoin(broadcast(tot))
-      .agg(first(col("__na")).as("n_a"), first(col("__nb")).as("n_b"),
-        max(abs(col("__fa").cast("decimal(18,0)") * col("__nb") -
-          col("__fb").cast("decimal(18,0)") * col("__na"))).as("__d"))
+      .agg(first(col("n_a")).as("n_a"), first(col("n_b")).as("n_b"),
+        max(abs(col("__fa").cast("decimal(18,0)") * col("n_b") -
+          col("__fb").cast("decimal(18,0)") * col("n_a"))).as("__d"))
       .select(col("n_a"), col("n_b"),
         round(col("__d").cast("double") /
           (col("n_a").cast("double") * col("n_b").cast("double")), 6).as("ks"))
@@ -1564,23 +1556,16 @@ object Stats {
     * and lets every moment accumulate in DECIMAL — one fixed IEEE closed
     * form at the end, no float rank arithmetic anywhere.
     *
-    * Scale: ranks come from the per-VALUE count relation (one aggregate),
-    * cumulated by a partitionless window over the bounded value DOMAIN
-    * (the skyline/q119 discipline — never a window over the rows; ENFORCED
-    * per axis — above 10⁵ distinct values [[gateValueCells]] RAISES naming
-    * the bucketing remedy), then joined back. Output (one row): n, rho
-    * (6dp). */
+    * Scale: ranks come from the per-VALUE count relation (one aggregate
+    * per axis, ranked by [[midRanks2]] over the bounded value DOMAIN — the
+    * skyline/q119 discipline, never a window over the rows), then joined
+    * back. Output (one row): n, rho (6dp). */
   def spearman(df: DataFrame, aCol: Column, bCol: Column): DataFrame = {
     val base = df.select(aCol.as("__a"), bCol.as("__b"))
       .filter(col("__a").isNotNull && col("__b").isNotNull)
-    def rank2(c: String, out: String): DataFrame = {
-      val w = Window.orderBy(col(c))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      gateValueCells(base.groupBy(col(c)).agg(count(lit(1)).as("__cnt")),
-          "__cnt", "spearman")
-        .withColumn("__cum", sum(col("__cnt")).over(w))
-        .select(col(c), (col("__cum") * 2 - col("__cnt") + 1).as(out))
-    }
+    def rank2(c: String, out: String): DataFrame =
+      midRanks2(base.groupBy(col(c)).agg(count(lit(1)).as("__cnt")), Nil, c,
+        "spearman", out -> col("__cnt")).select(col(c), col(out))
     val ranked = base.join(rank2("__a", "__x"), Seq("__a"))
       .join(rank2("__b", "__y"), Seq("__b"))
     val d = (c: Column) => c.cast("decimal(38,0)")
@@ -3062,7 +3047,7 @@ object Stats {
     // errors loudly — decimal keeps both engines exact to t ≈ 10^12
     // (t³ < 10^38; the oracle accumulates the same term as HUGEINT)
     // the 1-row tie/total aggregate reads the UNGATED rollup (the
-    // ksTwoSample discipline — combinable at any cardinality; the rank
+    // twoSampleCells rule — combinable at any cardinality; the rank
     // window path above stays gated)
     val ties = rawVals.agg(sum(col("__t").cast(DecimalType(38, 0)) * col("__t") *
         col("__t") - col("__t"))
@@ -3329,7 +3314,7 @@ object Stats {
     // degenerate: a totals row with null threshold/gain loses the
     // priority election to any real candidate (union + TakeOrdered(1)).
     // Totals read the UNGATED rollup (combinable at any cardinality —
-    // the ksTwoSample discipline; the window path above stays gated)
+    // the twoSampleCells rule; the window path above stays gated)
     val fallback = raw.agg(
         coalesce(sum(col("__n")), lit(0L)).as("n"),
         coalesce(sum(col("__p")), lit(0L)).as("n_pos"))
@@ -3658,7 +3643,7 @@ object Stats {
     // tie masses accumulate DOUBLED (t·(t−1), always even) in DECIMAL and
     // halve once in double — decimal division would inflate the scale.
     // These 1-row aggregates read the UNGATED rollup (combinable at any
-    // cardinality — the ksTwoSample discipline; the pair join is gated)
+    // cardinality — the twoSampleCells rule; the pair join is gated)
     def tiePairs(c: String) = raw.groupBy(col(c)).agg(sum(col("__c")).as("__t"))
       .agg(sum(col("__t").cast(dt) * (col("__t") - 1L)).as("__p2"),
         sum(col("__t")).as("__n"))
@@ -3730,8 +3715,8 @@ object Stats {
     * (quality rubrics, rater panels, composite metrics).
     *
     * CONTRACT: a COMPLETE design — every unit carries exactly the family's
-    * k items. An incomplete unit FAILS the job loudly (the multipleTesting
-    * rule): silently dropping or zero-filling it would bias both variance
+    * k items. An incomplete unit FAILS the job loudly ([[completeDesign]]):
+    * silently dropping or zero-filling it would bias both variance
     * terms. DETERMINISM: all moments are DECIMAL(38,6)-exact sums over
     * exact counts; the finish is fixed-shape IEEE, 6dp. Scale: one
     * unit-keyed rollup + one item-keyed rollup (item vocabulary bounded);
@@ -3754,20 +3739,9 @@ object Stats {
           col("__ni").cast("double")) /
         (col("__ni") - lit(1L)).cast("double")).cast(DecimalType(28, 12)))
         .as("__siv"))
-    val units = base.groupBy("__u")
-      .agg(count(lit(1)).as("__cnt"),
-        count_distinct(col("__i")).as("__dst"),
-        sum(col("__v").cast(dt)).as("__tot"))
-      .crossJoin(broadcast(k))
-      .select(col("__u"),
-        when(col("__dst") =!= col("__k") || col("__cnt") =!= col("__dst"),
-          raise_error(concat(lit("cronbachAlpha: unit "),
-            col("__u").cast("string"), lit(" has "), col("__dst"),
-            lit(" of "), col("__k"), lit(" distinct items over "),
-            col("__cnt"),
-            lit(" rows - incomplete/duplicated designs bias both variance" +
-              " terms"))))
-          .otherwise(col("__tot")).as("__tot"))
+    val units = completeDesign(base, "__u", "__i", "cronbachAlpha",
+      "bias both variance terms", condNoun = "items",
+      carry = Some("__tot" -> sum(col("__v").cast(dt))))
     val totals = units.agg(count(lit(1)).as("n_units"),
       sum(col("__tot")).as("__st"),
       // square in DOUBLE then quantize: decimal x decimal rescales under
@@ -4025,7 +3999,7 @@ object Stats {
     * condition totals and R_i the per-unit success counts; Q ~ χ²_{k−1}.
     *
     * CONTRACT: a COMPLETE design (every unit × every condition exactly
-    * once); incomplete units FAIL the job (the cronbachAlpha rule).
+    * once); incomplete units FAIL the job ([[completeDesign]]).
     * DETERMINISM: every Σ is an exact integer accumulated in
     * DECIMAL(38,0) (squares of 10-digit totals pass 2^63); Q is one
     * fixed IEEE shape, 6dp; a zero denominator (all-constant rows)
@@ -4036,18 +4010,8 @@ object Stats {
     val dt = DecimalType(38, 0)
     val base = df.select(unitCol.as("__u"), condCol.as("__c"),
       when(successCol, 1L).otherwise(0L).as("__x"))
-    val k = base.agg(count_distinct(col("__c")).as("__k"))
-    val rows = base.groupBy("__u")
-      .agg(count(lit(1)).as("__cnt"),
-        count_distinct(col("__c")).as("__dst"), sum(col("__x")).as("__r"))
-      .crossJoin(broadcast(k))
-      .select(when(col("__dst") =!= col("__k") ||
-        col("__cnt") =!= col("__dst"),
-        raise_error(concat(lit("cochranQ: unit "), col("__u").cast("string"),
-          lit(" has "), col("__dst"), lit(" of "), col("__k"),
-          lit(" distinct conditions over "), col("__cnt"),
-          lit(" rows - incomplete/duplicated designs bias the row terms"))))
-        .otherwise(col("__r")).as("__r"))
+    val rows = completeDesign(base, "__u", "__c", "cochranQ",
+      "bias the row terms", carry = Some("__r" -> sum(col("__x"))))
     val rowAgg = rows.agg(count(lit(1)).as("n_units"),
       sum(col("__r")).as("__sr"),
       sum(col("__r").cast(dt) * col("__r")).as("__srr"))
@@ -4074,10 +4038,10 @@ object Stats {
     * which reduces to the classic χ²_F when no ties exist and handles
     * ties through the A₁ term directly.
     *
-    * CONTRACT: complete design (the [[cochranQ]] rule — incomplete units
-    * raise). DETERMINISM — INTEGER-EXACT end to end: average ranks are
-    * carried DOUBLED (the spearman trick, exact dyadic rationals), and
-    * the doubled form clears every /2 and /4:
+    * CONTRACT: complete design (incomplete units raise —
+    * [[completeRows]]). DETERMINISM — INTEGER-EXACT end to end: average
+    * ranks are carried DOUBLED ([[midRanks2]], exact dyadic rationals),
+    * and the doubled form clears every /2 and /4:
     * T = (k−1)·Σ_j(SR2_j − n(k+1))² / (Σ r2² − nk(k+1)²) with all Σ in
     * DECIMAL(38,0) — ONE IEEE division at the end, 6dp. Scale: the rank
     * windows partition PER UNIT over ≤ k rows; condition relation is
@@ -4089,30 +4053,10 @@ object Stats {
     val dt = DecimalType(38, 0)
     val base = df.select(unitCol.as("__u"), condCol.as("__c"),
       valueCol.cast("double").as("__v"))
-    val k = base.agg(count_distinct(col("__c")).as("__k"))
-    val complete = base.groupBy("__u").agg(count(lit(1)).as("__cnt"),
-        count_distinct(col("__c")).as("__dst"))
-      .crossJoin(broadcast(k))
-      .select(col("__u"), when(col("__dst") =!= col("__k") ||
-        col("__cnt") =!= col("__dst"),
-        raise_error(concat(lit("friedman: unit "), col("__u").cast("string"),
-          lit(" has "), col("__dst"), lit(" of "), col("__k"),
-          lit(" distinct conditions over "), col("__cnt"),
-          lit(" rows - incomplete/duplicated designs corrupt the ranks"))))
-        .otherwise(col("__cnt")).as("__cnt"))
-    // doubled average rank of each value within its unit: 2r = 2*cum-t+1
-    val vals = base.groupBy("__u", "__v").agg(count(lit(1)).as("__t"))
-    val wRun = Window.partitionBy(col("__u")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked2 = vals
-      .withColumn("__cum", sum(col("__t")).over(wRun))
-      .select(col("__u"), col("__v"),
-        (col("__cum") * 2 - col("__t") + 1).as("__r2"))
-    // join the FULL gate relation and filter on the gated count: a bare
-    // select(__u) lets column pruning delete the raise_error expression
-    // entirely, silently waving incomplete designs through
-    val joined = base.join(complete, Seq("__u"))
-      .filter(col("__cnt") > 0L).drop("__cnt")
+    val ranked2 = midRanks2(base.groupBy("__u", "__v")
+      .agg(count(lit(1)).as("__t")), Seq("__u"), "__v", "friedman",
+      "__r2" -> col("__t"))
+    val joined = completeRows(base, "__u", "__c", "friedman")
       .join(ranked2, Seq("__u", "__v"))
     val byCond = joined.groupBy("__c")
       .agg(sum(col("__r2").cast(dt)).as("__sr2"), count(lit(1)).as("__n"))
@@ -4144,11 +4088,11 @@ object Stats {
     * L = Σ_j s_j·R_j over condition scores s_j = 1..k and within-unit
     * rank sums R_j; z = (L − nk(k+1)²/4)/√(nk²(k+1)²(k−1)/144).
     *
-    * CONTRACT: complete design (incomplete units raise — the cochranQ
-    * rule); `condScoreCol` carries the integer order 1..k; the normal
-    * moments assume untied ranks (average ranks on ties keep L exact but
+    * CONTRACT: complete design (incomplete units raise —
+    * [[completeRows]]); `condScoreCol` carries the integer order 1..k; the
+    * normal moments assume untied ranks (average ranks on ties keep L exact but
     * make z slightly conservative — documented, standard practice).
-    * DETERMINISM: doubled dyadic ranks (the friedman machinery), every Σ
+    * DETERMINISM: doubled dyadic ranks ([[midRanks2]]), every Σ
     * DECIMAL(38,0)-exact, L = L2/2 (a dyadic half — exact in IEEE), one
     * z shape 6dp. Returns one row: (n_units, n_conditions, l_stat, z). */
   def pageTrend(df: DataFrame, unitCol: Column, condScoreCol: Column,
@@ -4157,28 +4101,10 @@ object Stats {
     val dt = DecimalType(38, 0)
     val base = df.select(unitCol.as("__u"), condScoreCol.cast("long").as("__c"),
       valueCol.cast("double").as("__v"))
-    val k = base.agg(count_distinct(col("__c")).as("__k"))
-    val complete = base.groupBy("__u").agg(count(lit(1)).as("__cnt"),
-        count_distinct(col("__c")).as("__dst"))
-      .crossJoin(broadcast(k))
-      .select(col("__u"), when(col("__dst") =!= col("__k") ||
-        col("__cnt") =!= col("__dst"),
-        raise_error(concat(lit("pageTrend: unit "), col("__u").cast("string"),
-          lit(" has "), col("__dst"), lit(" of "), col("__k"),
-          lit(" distinct conditions over "), col("__cnt"),
-          lit(" rows - incomplete/duplicated designs corrupt the ranks"))))
-        .otherwise(col("__cnt")).as("__cnt"))
-    val vals = base.groupBy("__u", "__v").agg(count(lit(1)).as("__t"))
-    val wRun = Window.partitionBy(col("__u")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked2 = vals
-      .withColumn("__cum", sum(col("__t")).over(wRun))
-      .select(col("__u"), col("__v"),
-        (col("__cum") * 2 - col("__t") + 1).as("__r2"))
-    // full gate relation + filter (the friedman pruning rule): a pruned
-    // raise_error never fires
-    val m = base.join(complete, Seq("__u"))
-      .filter(col("__cnt") > 0L).drop("__cnt")
+    val ranked2 = midRanks2(base.groupBy("__u", "__v")
+      .agg(count(lit(1)).as("__t")), Seq("__u"), "__v", "pageTrend",
+      "__r2" -> col("__t"))
+    val m = completeRows(base, "__u", "__c", "pageTrend")
       .join(ranked2, Seq("__u", "__v"))
       .agg(sum(col("__c").cast(dt) * col("__r2")).as("__l2"),
         count_distinct(col("__c")).as("n_conditions"),
@@ -4538,30 +4464,24 @@ object Stats {
     * normal approximation
     * z = (W⁺ − n(n+1)/4) / √(n(n+1)(2n+1)/24 − Σ(t³−t)/48).
     *
-    * DETERMINISM — INTEGER-EXACT: average ranks carry DOUBLED (the
-    * friedman dyadic trick: 2r̄ = 2·cum − t + 1 off the |d| rollup), so
+    * DETERMINISM — INTEGER-EXACT: average ranks carry DOUBLED
+    * ([[midRanks2]] off the |d| rollup), so
     * W2 = 2W⁺, the z numerator 2W2 − n(n+1), and the scaled variance
     * (2n(n+1)(2n+1) − Σ(t³−t))/3 are all exact DECIMAL(38,0) integers —
     * ONE sqrt and ONE division finish, 6dp. W⁺ itself is the exact
     * dyadic W2/2. CARDINALITY CONTRACT (the mannWhitney rule): the
     * cumulative window runs over DISTINCT |d| — bound continuous
-    * differences by rounding first (ENFORCED: above 10⁵ distinct |d|
-    * [[gateValueCells]] RAISES). All-zero input reports nulls.
+    * differences by rounding first. All-zero input reports nulls.
     * Returns one row: (n_nonzero, w_plus, z). */
   def wilcoxonSignedRank(df: DataFrame, diffCol: Column): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dt = DecimalType(38, 0)
     val d = df.select(diffCol.cast("double").as("__d"))
       .filter(col("__d").isNotNull && col("__d") =!= 0.0)
-    val vals = gateValueCells(d.groupBy(abs(col("__d")).as("__a"))
+    val ranked = midRanks2(d.groupBy(abs(col("__d")).as("__a"))
       .agg(count(lit(1)).as("__t"),
         sum(when(col("__d") > 0, 1L).otherwise(0L)).as("__p")),
-      "__t", "wilcoxonSignedRank")
-    val wRun = Window.orderBy(col("__a"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked = vals.withColumn("__cum", sum(col("__t")).over(wRun))
-      .select(col("__t"), col("__p"),
-        (col("__cum") * 2 - col("__t") + 1).as("__r2"))
+      Nil, "__a", "wilcoxonSignedRank", "__r2" -> col("__t"))
     val m = ranked.agg(sum(col("__t")).as("__n"),
       sum(col("__p").cast(dt) * col("__r2")).as("__w2"),
       sum(col("__t").cast(dt) * col("__t") * col("__t") - col("__t"))
@@ -4586,8 +4506,8 @@ object Stats {
     * W = χ²_F/(m(n−1)) ties it to [[friedman]].
     *
     * CONTRACT: complete design — every rater rates every item exactly
-    * once (the cochranQ distinct gate; incomplete/duplicated raters
-    * RAISE). DETERMINISM: doubled dyadic ranks make rank sums exact
+    * once (incomplete/duplicated raters RAISE — [[completeRows]]).
+    * DETERMINISM: doubled dyadic ranks ([[midRanks2]]) make rank sums exact
     * (12ΣR² = 3ΣR2²), every Σ DECIMAL(38,0), ONE division, 6dp. Rank
     * windows partition per rater over ≤ n items; everything after is
     * rater/item-vocabulary-sized. All-tied raters (zero denominator)
@@ -4598,26 +4518,11 @@ object Stats {
     val dt = DecimalType(38, 0)
     val base = df.select(raterCol.as("__m"), itemCol.as("__i"),
       valueCol.cast("double").as("__v"))
-    val nItems = base.agg(count_distinct(col("__i")).as("__ni"))
-    val complete = base.groupBy("__m")
-      .agg(count(lit(1)).as("__cnt"), count_distinct(col("__i")).as("__dst"))
-      .crossJoin(broadcast(nItems))
-      .select(col("__m"), when(col("__dst") =!= col("__ni") ||
-        col("__cnt") =!= col("__dst"),
-        raise_error(concat(lit("kendallW: rater "), col("__m").cast("string"),
-          lit(" has "), col("__dst"), lit(" of "), col("__ni"),
-          lit(" distinct items over "), col("__cnt"),
-          lit(" rows - incomplete/duplicated designs corrupt the ranks"))))
-        .otherwise(col("__cnt")).as("__cnt"))
     val vals = base.groupBy("__m", "__v").agg(count(lit(1)).as("__t"))
-    val wRun = Window.partitionBy(col("__m")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked2 = vals.withColumn("__cum", sum(col("__t")).over(wRun))
-      .select(col("__m"), col("__v"),
-        (col("__cum") * 2 - col("__t") + 1).as("__r2"))
-    // full gate relation + filter (the friedman pruning rule)
-    val joined = base.join(complete, Seq("__m"))
-      .filter(col("__cnt") > 0L).drop("__cnt")
+    val ranked2 = midRanks2(vals, Seq("__m"), "__v", "kendallW",
+      "__r2" -> col("__t"))
+    val joined = completeRows(base, "__m", "__i", "kendallW",
+      unitNoun = "rater", condNoun = "items")
       .join(ranked2, Seq("__m", "__v"))
     val rankSums = joined.groupBy("__i")
       .agg(sum(col("__r2").cast(dt)).as("__sr2"))
@@ -4870,31 +4775,24 @@ object Stats {
     * T = n·m/N² · Σ_pooled (F_a(v) − F_b(v))², summed at every pooled
     * observation (per-value rollup × its count).
     *
-    * DETERMINISM AND SCALE — the ksTwoSample shape: one per-value count
-    * pass, cumulative counts over the DISTINCT value relation (bound
-    * continuous metrics by rounding — the cardinality contract, ENFORCED:
-    * above 10⁵ distinct values [[gateValueCells]] RAISES), the
-    * cross-multiplied integer form (m·cumA − n·cumB)² summed ×count in
+    * DETERMINISM AND SCALE — the ksTwoSample shape: cumulative counts over
+    * the gated two-sample value cells ([[twoSampleCells]]; bound
+    * continuous metrics by rounding), the cross-multiplied integer form
+    * (m·cumA − n·cumB)² summed ×count in
     * DECIMAL(38,0) (exact while n·m ≲ 3·10¹⁵ — sample beyond ~10⁷ a
     * side), ONE division n·m·N², 6dp. Returns one row: (n_a, n_b, t). */
   def cvmTwoSample(df: DataFrame, groupCol: String, valueCol: String,
                    a: String, b: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dt = DecimalType(38, 0)
-    val v = col(valueCol)
-    val raw = df.filter(col(groupCol).isin(a, b) && v.isNotNull)
-      .groupBy(v.as("__v"))
-      .agg(sum(when(col(groupCol) === a, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === b, 1L).otherwise(0L)).as("__cb"))
-    val cells = gateValueCells(raw, "__ca", "cvmTwoSample")
+    val (cells, totals) = twoSampleCells(
+      df.filter(col(groupCol).isin(a, b) && col(valueCol).isNotNull),
+      col(groupCol), col(valueCol), a, b, "cvmTwoSample")
     val wRun = Window.orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val cum = cells
       .withColumn("__fa", sum(col("__ca")).over(wRun))
       .withColumn("__fb", sum(col("__cb")).over(wRun))
-    // 1-row totals read the UNGATED rollup (the ksTwoSample discipline)
-    val totals = raw.agg(sum(col("__ca")).as("n_a"),
-      sum(col("__cb")).as("n_b"))
     val term = (col("__ca") + col("__cb")).cast(dt) *
       (col("__fa").cast(dt) * col("n_b") -
         col("__fb").cast(dt) * col("n_a")) *
@@ -5298,14 +5196,12 @@ object Stats {
     * the midrank Q_i of each unit's RANGE across units,
     * S_ij = Q_i·(R_ij − (k+1)/2); F = (b−1)·B/(A−B) with B = ΣS_j²/b,
     * A = ΣS_ij² (F ~ F(k−1, (b−1)(k−1))). Incomplete or duplicated
-    * designs RAISE (the [[friedman]] gate verbatim).
+    * designs RAISE ([[completeRows]]).
     *
-    * DETERMINISM AND SCALE: doubled within-unit midranks r2 come from
-    * unit-partitioned windows (k-bounded); doubled range midranks q2 from
-    * a per-range-value rollup + ONE cumulative window over the DISTINCT
-    * range relation (the [[ksTwoSample]] cardinality contract — ranges of
-    * integer-valued metrics stay a vocabulary; ENFORCED: above 10⁵
-    * distinct ranges [[gateValueCells]] RAISES); 4S = q2·(r2−k−1) is an
+    * DETERMINISM AND SCALE: doubled midranks ([[midRanks2]]) — r2 within
+    * each unit (k-bounded), q2 of each unit's range over the DISTINCT
+    * range relation (a keyless window — ranges of integer-valued metrics
+    * stay a vocabulary); 4S = q2·(r2−k−1) is an
     * exact integer, so A·16, (4S_j)², and the final F reduce to ONE IEEE
     * division of DECIMAL(38,0)-exact sums. Returns one row:
     * (n_units, n_conditions, f_stat 6dp). */
@@ -5316,39 +5212,18 @@ object Stats {
     val base = df.select(unitCol.as("__u"), condCol.as("__c"),
       valueCol.cast("double").as("__v"))
     val k = base.agg(count_distinct(col("__c")).as("__k"))
-    val complete = base.groupBy("__u").agg(count(lit(1)).as("__cnt"),
-        count_distinct(col("__c")).as("__dst"))
-      .crossJoin(broadcast(k))
-      .select(col("__u"), when(col("__dst") =!= col("__k") ||
-        col("__cnt") =!= col("__dst"),
-        raise_error(concat(lit("quadeTest: unit "), col("__u").cast("string"),
-          lit(" has "), col("__dst"), lit(" of "), col("__k"),
-          lit(" distinct conditions over "), col("__cnt"),
-          lit(" rows - incomplete/duplicated designs corrupt the ranks"))))
-        .otherwise(col("__cnt")).as("__cnt"))
-    // doubled within-unit midranks (the friedman machinery)
-    val vals = base.groupBy("__u", "__v").agg(count(lit(1)).as("__t"))
-    val wRun = Window.partitionBy(col("__u")).orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ranked2 = vals
-      .withColumn("__cum", sum(col("__t")).over(wRun))
-      .select(col("__u"), col("__v"),
-        (col("__cum") * 2 - col("__t") + 1).as("__r2"))
-    // doubled midrank of each unit's range across units: per-range-value
-    // rollup, never a unit-grain global window
+    val ranked2 = midRanks2(base.groupBy("__u", "__v")
+      .agg(count(lit(1)).as("__t")), Seq("__u"), "__v", "quadeTest",
+      "__r2" -> col("__t"))
+    // the range midranks rank a per-range-value rollup, never a unit-grain
+    // global window
     val ranges = base.groupBy("__u")
       .agg((max(col("__v")) - min(col("__v"))).as("__rng"))
-    val rCells = gateValueCells(
-      ranges.groupBy("__rng").agg(count(lit(1)).as("__t")),
-      "__t", "quadeTest")
-    val wRng = Window.orderBy(col("__rng"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val q2ByRng = rCells
-      .withColumn("__cum", sum(col("__t")).over(wRng))
-      .select(col("__rng"), (col("__cum") * 2 - col("__t") + 1).as("__q2"))
+    val q2ByRng = midRanks2(
+      ranges.groupBy("__rng").agg(count(lit(1)).as("__t")), Nil, "__rng",
+      "quadeTest", "__q2" -> col("__t"))
     val withQ = ranges.join(q2ByRng, "__rng").select(col("__u"), col("__q2"))
-    val joined = base.join(complete, Seq("__u"))
-      .filter(col("__cnt") > 0L).drop("__cnt")
+    val joined = completeRows(base, "__u", "__c", "quadeTest")
       .join(ranked2, Seq("__u", "__v"))
       .join(withQ, Seq("__u"))
       .crossJoin(broadcast(k))
@@ -5431,11 +5306,10 @@ object Stats {
     * S_g² the variance of (pooled − within) rank gaps, and
     * Welch–Satterthwaite df.
     *
-    * DETERMINISM AND SCALE — the [[ksTwoSample]] cell shape throughout:
-    * pooled and within-group DOUBLED midranks come from per-value counts
-    * + cumulative windows over the DISTINCT value relation (the
-    * cardinality contract, ENFORCED: above 10⁵ distinct values
-    * [[gateValueCells]] RAISES); each cell's squared rank-gap term is one
+    * DETERMINISM AND SCALE — the two-sample value cells throughout
+    * ([[twoSampleCells]]): pooled and within-group DOUBLED midranks
+    * ([[midRanks2]]) over the DISTINCT value relation, all three in one
+    * window; each cell's squared rank-gap term is one
     * fixed IEEE shape ×count, cast DECIMAL(38,6) BEFORE summing (the
     * [[mantelHaenszel]] discipline at the wider scale the ~N²-sized
     * terms need). Returns one row: (n_a, n_b, p_hat, t_stat, df) 6dp. */
@@ -5443,24 +5317,11 @@ object Stats {
                     a: String, b: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val dm = DecimalType(38, 6)
-    val v = col(valueCol)
-    val raw = df.filter(col(groupCol).isin(a, b) && v.isNotNull)
-      .groupBy(v.as("__v"))
-      .agg(sum(when(col(groupCol) === a, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col(groupCol) === b, 1L).otherwise(0L)).as("__cb"))
-    val cells = gateValueCells(raw, "__ca", "brunnerMunzel")
-    val wRun = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val t = col("__ca") + col("__cb")
-    val cum = cells
-      .withColumn("__r2", (sum(t).over(wRun) * 2L - t + 1L))
-      .withColumn("__ra2",
-        (sum(col("__ca")).over(wRun) * 2L - col("__ca") + 1L))
-      .withColumn("__rb2",
-        (sum(col("__cb")).over(wRun) * 2L - col("__cb") + 1L))
-    // 1-row totals read the UNGATED rollup (the ksTwoSample discipline)
-    val sizes = raw.agg(sum(col("__ca")).as("n_a"),
-      sum(col("__cb")).as("n_b"))
+    val (cum, sizes) = twoSampleCells(
+      df.filter(col(groupCol).isin(a, b) && col(valueCol).isNotNull),
+      col(groupCol), col(valueCol), a, b, "brunnerMunzel",
+      "__r2" -> (col("__ca") + col("__cb")), "__ra2" -> col("__ca"),
+      "__rb2" -> col("__cb"))
     val meanR = cum.agg(
       sum(col("__ca").cast(DecimalType(38, 0)) * col("__r2")).as("__sra2"),
       sum(col("__cb").cast(DecimalType(38, 0)) * col("__r2")).as("__srb2"))
@@ -5611,7 +5472,7 @@ object Stats {
     val cells = gateValueCells(raw, "__t", "ksExponential")
     val wRun = Window.orderBy(col("__v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // 1-row totals read the UNGATED rollup (the ksTwoSample discipline)
+    // 1-row totals read the UNGATED rollup (the twoSampleCells rule)
     val tot = raw.agg(sum(col("__t")).as("n"),
       sum((col("__v") * col("__t").cast("double")).cast("decimal(38,6)"))
         .cast("double").as("__sv"))
@@ -5964,6 +5825,89 @@ object Stats {
           "discipline)")))
   }
 
+  /** Doubled midranks: the average rank of each value cell, carried
+    * doubled so it stays an exact integer, 2·r̄ = 2·cum − t + 1, with t
+    * the cell's count and cum the running count through the cell in
+    * ascending `valueCol` order, nulls first. `cells` holds one row per
+    * (`partCols`, `valueCol`) cell; each of `ranks` names an output rank
+    * and the count it ranks (a count column or a sum of them), and all of
+    * them share ONE window, so one sort.
+    *
+    * The gate follows from the partitioning. With no `partCols` the window
+    * is keyless — one task over the whole value domain — so the cells go
+    * through [[gateValueCells]] (named `op`) once, here. Partitioned per
+    * unit, the complete design ([[completeRows]]) already bounds each
+    * partition to k cells, and there is no gate. Returns `cells`' columns
+    * plus the ranks. */
+  private[graft] def midRanks2(cells: DataFrame, partCols: Seq[String],
+      valueCol: String, op: String, ranks: (String, Column)*): DataFrame = {
+    val w = Window.partitionBy(partCols.map(col): _*).orderBy(col(valueCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val in = if (partCols.isEmpty) gateValueCells(cells, valueCol, op)
+      else cells
+    in.select(col("*") +: ranks.map { case (out, t) =>
+      (sum(t).over(w) * 2L - t + 1L).as(out) }: _*)
+  }
+
+  /** The complete-design gate of the related-samples family: every `unit`
+    * of `base` must carry each of the k distinct `cond` values exactly
+    * once. A unit with d of k distinct conditions over n rows (d ≠ k or
+    * n ≠ d) FAILS the job loudly, naming the unit, d, k, n and the `harm`
+    * a hole or duplicate would do — silently dropping or zero-filling it
+    * would bias the statistic. Returns one row per unit: (`unit`, carried)
+    * where the carried column — the unit's row count `__cnt`, or the
+    * `carry` aggregate under its name — holds the `raise_error`, so any
+    * consumer that reads it fires the raise. */
+  private def completeDesign(base: DataFrame, unit: String, cond: String,
+      op: String, harm: String, unitNoun: String = "unit",
+      condNoun: String = "conditions",
+      carry: Option[(String, Column)] = None): DataFrame = {
+    val out = carry.fold("__cnt")(_._1)
+    val k = base.agg(count_distinct(col(cond)).as("__k"))
+    base.groupBy(unit)
+      .agg(count(lit(1)).as("__cnt"), count_distinct(col(cond)).as("__dst")
+        +: carry.map { case (n, c) => c.as(n) }.toSeq: _*)
+      .crossJoin(broadcast(k))
+      .select(col(unit), when(col("__dst") =!= col("__k") ||
+        col("__cnt") =!= col("__dst"),
+        raise_error(concat(lit(s"$op: $unitNoun "), col(unit).cast("string"),
+          lit(" has "), col("__dst"), lit(" of "), col("__k"),
+          lit(s" distinct $condNoun over "), col("__cnt"),
+          lit(s" rows - incomplete/duplicated designs $harm"))))
+        .otherwise(col(out)).as(out))
+  }
+
+  /** `base` restricted to the units that pass [[completeDesign]] — the
+    * rank tests' form, whose message says the holes corrupt the ranks.
+    * The pruning rule: the join takes the gate's FULL relation and filters
+    * on its carried count, because a bare select of the unit column lets
+    * column pruning delete the `raise_error` entirely, silently waving
+    * incomplete designs through. */
+  private def completeRows(base: DataFrame, unit: String, cond: String,
+      op: String, unitNoun: String = "unit",
+      condNoun: String = "conditions"): DataFrame =
+    base.join(completeDesign(base, unit, cond, op, "corrupt the ranks",
+        unitNoun, condNoun), Seq(unit))
+      .filter(col("__cnt") > 0L).drop("__cnt")
+
+  /** The two-sample value rollup: `rows`, already restricted to groups
+    * `a` and `b` of `g` and to non-null values, roll up to one
+    * (__v, __ca, __cb) cell per distinct `v`, returned gated and ranked by
+    * [[midRanks2]] (keyless, so gated once under `op`; with no `ranks` the
+    * gated cells alone), with the one-row totals (n_a, n_b). The totals
+    * read the UNGATED rollup: a combinable sum is safe at any cardinality,
+    * and reading the gated cells would re-evaluate the gate's count in one
+    * more lazy join and job. */
+  private def twoSampleCells(rows: DataFrame, g: Column, v: Column,
+      a: String, b: String, op: String,
+      ranks: (String, Column)*): (DataFrame, DataFrame) = {
+    val raw = rows.groupBy(v.as("__v"))
+      .agg(sum(when(g === a, 1L).otherwise(0L)).as("__ca"),
+        sum(when(g === b, 1L).otherwise(0L)).as("__cb"))
+    (midRanks2(raw, Nil, "__v", op, ranks: _*),
+      raw.agg(sum(col("__ca")).as("n_a"), sum(col("__cb")).as("n_b")))
+  }
+
   // ------------------------------------------------ Qn scale estimator
   /** Rousseeuw–Croux Qn robust scale (Rousseeuw & Croux 1993): the k-th
     * smallest pairwise gap |x_i − x_j| (i < j) with k = C(h, 2),
@@ -6207,8 +6151,8 @@ object Stats {
     * z's to [[bhFdr]] for the multiplicity correction.
     *
     * DETERMINISM AND SCALE — the [[kruskalWallis]] cell shape: pooled
-    * DOUBLED midranks from the per-(value) rollup (cardinality
-    * contract), per-group Σ2R and the tie mass as exact DECIMAL(38,0);
+    * DOUBLED midranks ([[midRanks2]]) from the per-(value) rollup, per-group
+    * Σ2R and the tie mass (off the ungated rollup) as exact DECIMAL(38,0);
     * pairs from the broadcast k-row group-rollup self-join. Returns one
     * row per pair: (g1, g2, n1, n2, mean_rank_1, mean_rank_2, z) 6dp. */
   def dunnPosthoc(df: DataFrame, groupCol: Column,
@@ -6219,12 +6163,11 @@ object Stats {
         valueCol.cast("double").as("__v"))
       .filter(col("__g").isNotNull && col("__v").isNotNull)
     val cells = base.groupBy("__v").agg(count(lit(1)).as("__t"))
-    val wRun = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val r2ByV = cells
-      .withColumn("__cum", sum(col("__t")).over(wRun))
-      .select(col("__v"), (col("__cum") * 2L - col("__t") + 1L).as("__r2"))
-    val perG = base.join(r2ByV, "__v")
+    val r2ByV = midRanks2(cells, Nil, "__v", "dunnPosthoc",
+      "__r2" -> col("__t"))
+    // the gated ranks are at most 10⁵ cells: broadcast them to the rows
+    // rather than the rows to the single-partition window output
+    val perG = base.join(broadcast(r2ByV), "__v")
       .groupBy("__g")
       .agg(count(lit(1)).as("__n"),
         sum(col("__r2").cast(dt)).as("__sr2"))
@@ -6847,10 +6790,9 @@ object Stats {
 
   /** Two-sample rank cells with doubled midranks and broadcast group
     * totals — the scaffold for the linear-rank-statistic family below
-    * ([[conoverSquaredRanks]]' shape, factored): one (value)-grain
-    * rollup, one cumulative window over the DISTINCT value relation
-    * (cardinality contract — above 10⁵ cells [[gateValueCells]] RAISES
-    * loudly), 2R = 2F − t + 1 exact integers. Columns:
+    * ([[conoverSquaredRanks]]' shape, factored): the [[twoSampleCells]]
+    * rollup of the string group and double value, pooled doubled
+    * midranks ([[midRanks2]]). Columns:
     * (__v, __ca, __cb, __r2, __na, __nb). */
   private def twoSampleRankCells(df: DataFrame, groupCol: Column,
       valueCol: Column, a: String, b: String): DataFrame = {
@@ -6858,22 +6800,10 @@ object Stats {
         valueCol.isNotNull)
       .select(groupCol.cast("string").as("__g"),
         valueCol.cast("double").as("__v"))
-    val raw = base.groupBy("__v")
-      .agg(sum(when(col("__g") === a, 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__g") === b, 1L).otherwise(0L)).as("__cb"))
-    val cells = gateValueCells(raw, "__ca", "twoSampleRankCells")
-    val wRun = Window.orderBy(col("__v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // 1-row totals read the UNGATED rollup: combinable at any
-    // cardinality, and the windowed path stays gated — avoids a second
-    // lazy re-evaluation of the gate's own count
-    val tot = raw.agg(sum(col("__ca")).as("__na"),
-      sum(col("__cb")).as("__nb"))
-    cells
-      .withColumn("__f", sum(col("__ca") + col("__cb")).over(wRun))
-      .withColumn("__r2",
-        col("__f") * 2L - (col("__ca") + col("__cb")) + 1L)
-      .crossJoin(broadcast(tot))
+    val (cells, tot) = twoSampleCells(base, col("__g"), col("__v"), a, b,
+      "twoSampleRankCells", "__r2" -> (col("__ca") + col("__cb")))
+    cells.crossJoin(broadcast(
+      tot.select(col("n_a").as("__na"), col("n_b").as("__nb"))))
   }
 
   /** Permutation-moment z for a linear rank statistic T = Σ_A s(i):

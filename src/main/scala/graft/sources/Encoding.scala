@@ -24,25 +24,43 @@ object Encoding {
     sniff(path, SparkSession.getActiveSession
       .fold(new Configuration())(_.sparkContext.hadoopConfiguration), sniffBytes)
 
-  /** [[detect]] through the Hadoop `FileSystem`, as Spark's readers open
-    * `path`. A directory or glob sniffs its first data file: sorted by path,
+  /** The data files of `path` — a file, a directory or a glob, on any
+    * Hadoop file system — as Spark's readers see them: sorted by path,
     * depth first, skipping names that start with `_` or `.` (Spark's own
-    * listing skips those too, e.g. `_SUCCESS`) and empty files. */
-  private[sources] def sniff(path: String, conf: Configuration, sniffBytes: Int = 4096): String = {
+    * listing skips those too, e.g. `_SUCCESS`) and empty files. Lazy, so
+    * a caller that wants the first file lists no further. */
+  private[sources] def dataFiles(path: String, conf: Configuration): Iterator[Path] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     def hidden(s: FileStatus) = Seq("_", ".").exists(s.getPath.getName.startsWith)
-    def firstFile(ss: Seq[FileStatus]): Option[FileStatus] =
+    def walk(ss: Seq[FileStatus]): Iterator[Path] =
       ss.sortBy(_.getPath.toString).iterator.flatMap { s =>
-        if (s.isDirectory) firstFile(fs.listStatus(s.getPath).toSeq.filterNot(hidden))
-        else Some(s).filter(_.getLen > 0)
-      }.nextOption()
-    val file = firstFile(Option(fs.globStatus(p)).toSeq.flatten)
-      .getOrElse(throw new java.io.FileNotFoundException(s"no data file at $path"))
-    val in = fs.open(file.getPath)
-    val head = try in.readNBytes(sniffBytes) finally in.close()
-    detectBytes(head)
+        if (s.isDirectory) walk(fs.listStatus(s.getPath).toSeq.filterNot(hidden))
+        else Iterator(s).filter(_.getLen > 0).map(_.getPath)
+      }
+    walk(Option(fs.globStatus(p)).toSeq.flatten)
   }
+
+  /** Up to `limit` bytes of `file`, read through its Hadoop `FileSystem`. */
+  private def readBytes(file: Path, conf: Configuration, limit: Int): Array[Byte] = {
+    val in = file.getFileSystem(conf).open(file)
+    try in.readNBytes(limit) finally in.close()
+  }
+
+  /** [[detect]] through the Hadoop `FileSystem`, as Spark's readers open
+    * `path`. A directory or glob sniffs its first data file ([[dataFiles]]). */
+  private[sources] def sniff(path: String, conf: Configuration, sniffBytes: Int = 4096): String = {
+    val file = dataFiles(path, conf).nextOption()
+      .getOrElse(throw new java.io.FileNotFoundException(s"no data file at $path"))
+    detectBytes(readBytes(file, conf, sniffBytes))
+  }
+
+  /** Each data file of `path` ([[dataFiles]]) decoded whole with `charset`,
+    * in listing order, through the Hadoop `FileSystem` — the driver-side
+    * path for small files in a charset Spark's line reader cannot split. */
+  private[sources] def readStrings(path: String, conf: Configuration,
+                                   charset: String): Iterator[String] =
+    dataFiles(path, conf).map(f => decode(readBytes(f, conf, Int.MaxValue), charset))
 
   def detectBytes(b: Array[Byte]): String = {
     def u(i: Int): Int = b(i) & 0xFF
@@ -70,8 +88,12 @@ object Encoding {
     * path used by the eager readers: yaml/html/xml/xlsx). */
   def readString(path: String, charset: Option[String] = None): String = {
     val bytes = Files.readAllBytes(Paths.get(path))
-    val cs = charset.getOrElse(detectBytes(bytes.take(4096)))
-    val s = new String(bytes, cs)
+    decode(bytes, charset.getOrElse(detectBytes(bytes.take(4096))))
+  }
+
+  /** `bytes` decoded with `charset`, without a leading byte-order mark. */
+  private def decode(bytes: Array[Byte], charset: String): String = {
+    val s = new String(bytes, charset)
     if (s.nonEmpty && s.charAt(0) == '\uFEFF') s.substring(1) else s
   }
 }

@@ -115,9 +115,11 @@ object Readers {
     val raw =
       if (enc.equalsIgnoreCase("UTF-8") || enc.equalsIgnoreCase("us-ascii"))
         spark.sparkContext.textFile(path)
-      else // non-UTF8: decode whole (small) file driver-side, keep lines
-        spark.sparkContext.parallelize(
-          Encoding.readString(path, Some(enc)).split("\r\n|\r|\n", -1).toSeq)
+      else // non-UTF8: decode the whole (small) data files driver-side,
+        // one after another as textFile reads them, and keep their lines
+        spark.sparkContext.parallelize(Encoding.readStrings(path,
+            spark.sparkContext.hadoopConfiguration, enc)
+          .flatMap(_.split("\r\n|\r|\n", -1)).toSeq)
 
     val indexed = raw.zipWithIndex()
     val total = indexed.count()

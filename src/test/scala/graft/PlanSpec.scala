@@ -1219,8 +1219,8 @@ class PlanSpec extends SparkSpec {
 
   test("q507-q510 rank-scale family: the midrank window consumes the " +
     "value-cell rollup (HashAggregate below)") {
-    // q509 shares the exact same scaffold but localCheckpoints the cell
-    // relation (two consumers), which materializes the window out of the
+    // q509 shares the exact same scaffold but cuts the cell relation with
+    // Ops.materialize (two consumers), which takes the window out of the
     // executed plan — covered by the shared twoSampleRankCells path here
     for (q <- Seq("q507_ansari_bradley", "q508_mood_scale",
         "q510_cucconi")) {

@@ -73,6 +73,21 @@ class ReadersSpec extends SparkSpec {
     }
   }
 
+  test("read_csv reads a directory, a glob and a file: URI of non-UTF-8 files") {
+    import java.nio.file.{Files, Paths}
+    val direct = Readers.csv(spark, s"$fx/latin1.csv").collect().toSet
+    assert(direct.size == 2)
+    // the windows-1252 file plus a _SUCCESS marker, which the listing skips
+    val dir = Files.createTempDirectory("graft-csv-enc")
+    Files.copy(Paths.get(s"$fx/latin1.csv"), dir.resolve("part-00000.csv"))
+    Files.write(dir.resolve("_SUCCESS"), Array[Byte]())
+    for (p <- Seq(dir.toString, s"$dir/part-*", dir.toUri.toString)) {
+      val back = Readers.csv(spark, p)
+      assert(back.columns.toSeq == Seq("h1", "h2"), p)
+      assert(back.collect().toSet == direct, p)
+    }
+  }
+
   test("read_fixed_fmt: offsets + header, raw names kept (golden)") {
     val df = Readers.fixedWidth(spark, s"$fx/fixed_w_header.txt",
       starts = Seq(0, 18, 29, 33, 38, 50), hasHeader = true)

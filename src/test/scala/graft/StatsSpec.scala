@@ -1418,6 +1418,63 @@ class StatsSpec extends SparkSpec {
       "hash bootstrap must not depend on layout")
   }
 
+  test("midRanks2 equals the textbook doubled average rank, rank_min + rank_max") {
+    import org.apache.spark.sql.expressions.Window
+    // ties, a null value cell (ascending order puts it first) and two units
+    val rows = Seq(("u1", "a", Some(3.0)), ("u1", "b", Some(1.0)),
+      ("u1", "a", Some(3.0)), ("u1", "b", None), ("u1", "a", Some(2.0)),
+      ("u1", "b", Some(3.0)), ("u1", "a", None), ("u1", "b", Some(1.0)),
+      ("u2", "a", Some(5.0)), ("u2", "b", Some(5.0)), ("u2", "a", Some(4.0)),
+      ("u2", "b", None)).toDF("u", "g", "v")
+    // rank() gives rank_min; rank_max is N + 1 − rank() in the reverse
+    // order (descending, nulls last), N the rows in the partition
+    def textbook(rs: org.apache.spark.sql.DataFrame, part: Seq[String],
+                 out: String) = {
+      val p = part.map(col)
+      rs.select(p ++ Seq(col("v"), (rank().over(Window.partitionBy(p: _*)
+        .orderBy(col("v").asc_nulls_first)) + count(lit(1))
+        .over(Window.partitionBy(p: _*)) + 1L - rank().over(Window
+          .partitionBy(p: _*).orderBy(col("v").desc_nulls_last))).as(out)): _*)
+        .distinct()
+    }
+    def same(got: org.apache.spark.sql.DataFrame,
+             want: org.apache.spark.sql.DataFrame): Unit = {
+      val cols = want.columns.toSeq.map(col)
+      val g = got.select(cols: _*)
+      assert(g.count() == want.count())
+      assert(g.exceptAll(want).isEmpty && want.exceptAll(g).isEmpty,
+        g.orderBy(cols: _*).collect().mkString(","))
+    }
+    // keyless: one window over the whole value rollup (gated)
+    same(Stats.midRanks2(rows.groupBy("v").agg(count(lit(1)).as("t")), Nil,
+      "v", "midRanks2Spec", "r2" -> col("t")), textbook(rows, Nil, "r2"))
+    // partitioned per unit
+    same(Stats.midRanks2(rows.groupBy("u", "v").agg(count(lit(1)).as("t")),
+      Seq("u"), "v", "midRanks2Spec", "r2" -> col("t")),
+      textbook(rows, Seq("u"), "r2"))
+    // several count columns in one call (the brunnerMunzel shape): the
+    // pooled rank over ca + cb and each group's own rank over its count,
+    // compared where the group has the value
+    val cells = rows.groupBy("v").agg(
+      sum(when(col("g") === "a", 1L).otherwise(0L)).as("ca"),
+      sum(when(col("g") === "b", 1L).otherwise(0L)).as("cb"))
+    val three = Stats.midRanks2(cells, Nil, "v", "midRanks2Spec",
+      "r2" -> (col("ca") + col("cb")), "ra2" -> col("ca"),
+      "rb2" -> col("cb"))
+    same(three, textbook(rows, Nil, "r2"))
+    same(three.filter(col("ca") > 0L),
+      textbook(rows.filter(col("g") === "a"), Nil, "ra2"))
+    same(three.filter(col("cb") > 0L),
+      textbook(rows.filter(col("g") === "b"), Nil, "rb2"))
+    // pin a few values by hand: u1's values sort null, null, 1, 1, 2, 3, 3, 3
+    val u1 = Stats.midRanks2(rows.filter(col("u") === "u1").groupBy("v")
+        .agg(count(lit(1)).as("t")), Nil, "v", "midRanks2Spec",
+        "r2" -> col("t"))
+      .select("v", "r2").as[(Option[Double], Long)].collect().toMap
+    assert(u1 == Map(None -> 3L, Some(1.0) -> 7L, Some(2.0) -> 10L,
+      Some(3.0) -> 14L))
+  }
+
   test("spearman: monotone = 1, inverse = -1, tie case hand-computed") {
     def rho(pairs: Seq[(Double, Double)]): Double =
       Stats.spearman(pairs.toDF("a", "b"), col("a"), col("b"))
@@ -1766,6 +1823,10 @@ class StatsSpec extends SparkSpec {
         () => Stats.wilcoxonSignedRank(wide, col("v") + 1.0).collect()),
       ("jonckheereTerpstra",
         () => Stats.jonckheereTerpstra(wideG, col("g"), col("v")).collect()),
+      // its keyless midrank window over the value rollup was the one
+      // rank-cell copy left ungated until midRanks2 took it over
+      ("dunnPosthoc",
+        () => Stats.dunnPosthoc(wideG, col("g"), col("v")).collect()),
       ("ksExponential",
         () => Stats.ksExponential(wide, col("v")).collect()),
       // the V²-broadcast pair-join class (the qnScale shape) and the
