@@ -10,7 +10,7 @@ class DbfSpec extends SparkSpec {
   private val fixture = "/root/reference/data/test/test.dbf"
 
   test("read_dbf parses the reference fixture (io.py:677-722, dbf.py)") {
-    assume(new java.io.File(fixture).exists())
+    assume(new java.io.File(fixture).exists(), s"$fixture is absent")
     val df = graft.sources.DbfReader.read(spark, fixture)
     assert(df.count() == 8)
     assert(df.columns.take(4).toSeq ==
@@ -22,7 +22,7 @@ class DbfSpec extends SparkSpec {
   }
 
   test("dbf -> detect+cast matches the reference's golden conversion semantics") {
-    assume(new java.io.File(fixture).exists())
+    assume(new java.io.File(fixture).exists(), s"$fixture is absent")
     val df = graft.sources.DbfReader.read(spark, fixture)
     val (typed, _) = DetectTypes.inferAndCast(df, minConf = 0.5)
     val r = typed.filter(typed("geoid10") === 2708).head()

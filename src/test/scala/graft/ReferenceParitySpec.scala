@@ -164,8 +164,11 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("test_excel_html_export (test_io.py): Excel-exported .htm first row") {
-    val df = graft.sources.Readers.htmlTable(spark,
-      "/root/reference/data/test/test.htm", sanitize = true)
+    // The reference's own Excel export (Office markup); fixtures/test.htm is
+    // a plain table, so there is no repo-held stand-in for this one.
+    val fixture = "/root/reference/data/test/test.htm"
+    assume(new java.io.File(fixture).exists(), s"$fixture is absent")
+    val df = graft.sources.Readers.htmlTable(spark, fixture, sanitize = true)
     val first = df.head()
     val got = df.columns.zip(first.toSeq).toMap
     assert(got("sparse_data") == "Iñtërnâtiônàližætiøn")
@@ -175,7 +178,14 @@ class ReferenceParitySpec extends SparkSpec {
   }
 
   test("test_geojson_with_crs (test_io.py): crs block in written collections") {
-    val df = graft.sources.GeoJson.read(spark, "/root/reference/data/test/test.geojson")
+    // The subject is the crs block the writer emits; the collection only
+    // supplies features. fixtures/points.geojson reproduces the reference
+    // test.geojson Point shape (FIXTURES.md §8) when the corpus is absent.
+    val reference = "/root/reference/data/test/test.geojson"
+    val fixture =
+      if (new java.io.File(reference).exists()) reference
+      else "src/test/resources/fixtures/points.geojson"
+    val df = graft.sources.GeoJson.read(spark, fixture)
     val json = graft.sources.GeoJson.collectionString(df, crs = Some("EPSG:4269"))
     assert(json.contains(""""crs": {"type": "name", "properties": {"name": "EPSG:4269"}}"""))
   }

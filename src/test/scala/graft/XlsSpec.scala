@@ -8,7 +8,7 @@ class XlsSpec extends SparkSpec {
   private val fixture = "/root/reference/data/test/test.xls"
 
   test("read_xls parses OLE2+BIFF8 with date/number/string cells") {
-    assume(new java.io.File(fixture).exists())
+    assume(new java.io.File(fixture).exists(), s"$fixture is absent")
     val df = graft.sources.XlsReader.read(spark, fixture)
     assert(df.columns.toSeq ==
       Seq("some_date", "sparse_data", "some_value", "unicode_test"))
@@ -22,7 +22,7 @@ class XlsSpec extends SparkSpec {
   }
 
   test("sheet selection reads the second sheet") {
-    assume(new java.io.File(fixture).exists())
+    assume(new java.io.File(fixture).exists(), s"$fixture is absent")
     val df = graft.sources.XlsReader.read(spark, fixture, sheet = 1)
     assert(df.columns.nonEmpty && df.count() > 0)
   }
