@@ -3,8 +3,7 @@ package graft.functions
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions.coalesce
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StringType}
@@ -27,18 +26,22 @@ import org.apache.spark.unsafe.types.UTF8String
   * `LenientNumber.column` puts the unchanged chain behind it in a
   * `coalesce`, so a miss is exact by construction.
   *
-  * A miss costs the scan plus the chain, and Spark's common subexpression
-  * elimination does not reach into `coalesce`'s later children, so the chain
-  * runs each of its `stripNum` uses separately. `toFloat`'s chain uses it up
-  * to three times (the `isNumeric` test and the value): a `toFloat` column of
-  * numeric-looking misses (16+ digits, padded, exponents) casts 20–55% slower
-  * than the chain alone did. Outside `warn` mode `toInt`'s chain uses it once,
-  * so its misses cost no more than before. On meza's ingest path about 99%
-  * of cells are hits.
+  * The kernel compiles into the enclosing whole-stage-codegen stage
+  * ([[KernelCodegen]]). A miss costs the scan plus the chain, and Spark's
+  * common subexpression elimination does not reach into `coalesce`'s later
+  * children, compiled or not, so the chain runs each of its `stripNum` uses
+  * separately. `toFloat`'s chain uses it up to three times (the `isNumeric`
+  * test and the value): a `toFloat` column of numeric-looking misses casts
+  * slower than the chain alone. Compiled, on 500k cached cells to the `noop`
+  * sink (`local[3]`, medians of 7, two rounds), 16+ digits cost +46–51%,
+  * padded numbers +40–47% and exponents +33–35% over the chain, against
+  * +57–74%, +40–55% and +38–43% interpreted; `n/a` costs −2 to +16%.
+  * Outside `warn` mode `toInt`'s chain uses it once, so its misses cost
+  * about the chain (0–7%). On meza's ingest path about 99% of cells are hits.
   */
 private[functions] case class LenientNumber(child: Expression, integral: Boolean,
     warn: Boolean, thousandSep: Char, decimalSep: Char)
-    extends UnaryExpression with CodegenFallback {
+    extends KernelCodegen {
   import LenientNumber._
 
   override def dataType: DataType = if (integral) LongType else DoubleType

@@ -1,5 +1,6 @@
 package graft.sources
 
+import com.fasterxml.jackson.core.io.JsonStringEncoder
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -133,8 +134,10 @@ object GeoJson {
       max(col("max_lon")), max(col("max_lat"))).head()
     val bbox = if (b.isNullAt(0)) Seq(0.0, 0.0, 0.0, 0.0)
       else Seq(b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3))
-    val crsJson = crs.map(c =>
-      s""", "crs": {"type": "name", "properties": {"name": "$c"}}""").getOrElse("")
+    val crsJson = crs.map { c =>
+      val name = new String(JsonStringEncoder.getInstance.quoteAsString(c))
+      s""", "crs": {"type": "name", "properties": {"name": "$name"}}"""
+    }.getOrElse("")
     out.write(s"""{"type": "FeatureCollection", "bbox": [${bbox.mkString(", ")}]$crsJson, "features": [""")
     val it = feats.orderBy("fid").select(col("feature_json")).toLocalIterator()
     var first = true

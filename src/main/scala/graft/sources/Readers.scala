@@ -109,17 +109,32 @@ object Readers {
 
   /** Ordered single-file CSV with row/col windows: zipWithIndex slice, then
     * per-partition univocity parse (the one genuinely imperative read path,
-    * matching the reference's deque/islice machinery io.py:456-502). */
+    * matching the reference's deque/islice machinery io.py:456-502). The
+    * data files of a directory or glob ([[Encoding.dataFiles]]) are read one
+    * after another; with a header, each file after the first loses its first
+    * non-blank line, as Spark's CSV source drops every file's header. */
   private def windowedCsv(spark: SparkSession, path: String, opts: CsvOptions,
                           enc: String): DataFrame = {
+    val sc = spark.sparkContext
+    val headers = opts.header && opts.customHeader.isEmpty
+    def dropHeader(lines: Iterator[String]): Iterator[String] = {
+      val (blank, rest) = lines.span(_.trim.isEmpty)
+      blank ++ rest.drop(1)
+    }
     val raw =
       if (enc.equalsIgnoreCase("UTF-8") || enc.equalsIgnoreCase("us-ascii"))
-        spark.sparkContext.textFile(path)
+        sc.union(Encoding.dataFiles(path, sc.hadoopConfiguration).zipWithIndex.map {
+          case (f, 0) => sc.textFile(f.toString)
+          // a file's first split holds its first line, as for Spark's header
+          case (f, _) => sc.textFile(f.toString).mapPartitionsWithIndex((i, it) =>
+            if (i == 0 && headers) dropHeader(it) else it)
+        }.toSeq)
       else // non-UTF8: decode the whole (small) data files driver-side,
-        // one after another as textFile reads them, and keep their lines
-        spark.sparkContext.parallelize(Encoding.readStrings(path,
-            spark.sparkContext.hadoopConfiguration, enc)
-          .flatMap(_.split("\r\n|\r|\n", -1)).toSeq)
+        // one after another, and keep their lines
+        sc.parallelize(Encoding.readStrings(path, sc.hadoopConfiguration, enc)
+          .map(_.split("\r\n|\r|\n", -1).iterator).zipWithIndex
+          .flatMap { case (lines, k) => if (k > 0 && headers) dropHeader(lines) else lines }
+          .toSeq)
 
     val indexed = raw.zipWithIndex()
     val total = indexed.count()

@@ -4,20 +4,22 @@ import java.nio.charset.{Charset, StandardCharsets}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.Text
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext}
 
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{InternalRow, NoopFilters, OrderedFilters, StructFilters}
-import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
+import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityGenerator, UnivocityParser}
 import org.apache.spark.sql.catalyst.expressions.{ExprUtils, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{HadoopFileLinesReader, OutputWriter, OutputWriterFactory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.{SerializableConfiguration, Utils}
 
 /** Spark's CSV source with a byte-scan line tokenizer in front of its
@@ -31,6 +33,12 @@ import org.apache.spark.util.{SerializableConfiguration, Utils}
   * `UnivocityParser`, inside the same `FailureSafeParser`. A read the scan
   * cannot take whole (see [[CsvLineScan.qualifies]]) is `CSVFileFormat`'s
   * reader unchanged.
+  *
+  * Writes are the mirror image: a row in the grammar of [[CsvLineWriter]]
+  * is formatted straight into bytes, and every other row goes to Spark's
+  * `UnivocityGenerator` over the same file. A write with an option other
+  * than `header` and `maxRecordsPerFile`, or a column type outside
+  * [[LineWriter.columnKinds]], is `CSVFileFormat`'s writer unchanged.
   */
 class CsvLineFormat extends CSVFileFormat {
 
@@ -76,6 +84,28 @@ class CsvLineFormat extends CSVFileFormat {
         partitionSchema, requiredSchema, filters, options, hadoopConf)
     }
 
+  override def prepareWrite(
+      sparkSession: SparkSession,
+      job: Job,
+      options: Map[String, String],
+      dataSchema: StructType): OutputWriterFactory = {
+    val spark = super.prepareWrite(sparkSession, job, options, dataSchema)
+    val conf = sparkSession.sessionState.conf
+    val parsed = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val kinds = LineWriter.columnKinds(dataSchema)
+    // the options Writers.csv sets
+    val allowed = Set("path", "header", "maxrecordsperfile")
+    if (kinds.isEmpty || !LineWriter.plainOptions(options, allowed) ||
+        conf.getConf(SQLConf.LEGACY_NULL_VALUE_WRITTEN_AS_QUOTED_EMPTY_STRING_CSV)) spark
+    else new OutputWriterFactory {
+      override def getFileExtension(context: TaskAttemptContext): String =
+        spark.getFileExtension(context)
+      override def newInstance(path: String, dataSchema: StructType,
+                               context: TaskAttemptContext): OutputWriter =
+        new CsvLineWriter(path, dataSchema, kinds.get, context, parsed)
+    }
+  }
+
   /** The byte-scan reader, or None where [[CsvLineScan.qualifies]] says no. */
   private def lineReader(
       sparkSession: SparkSession,
@@ -115,6 +145,92 @@ class CsvLineFormat extends CSVFileFormat {
         actualRequiredSchema, requiredSchema, structFilters)
     })
   }
+}
+
+/** A CSV part file whose rows are formatted straight into bytes where they
+  * take the grammar below, and written by Spark's `UnivocityGenerator`
+  * otherwise (the header always is). A row is formatted when not every field
+  * is null and each non-null field is:
+  *   - a string that is non-empty and valid UTF-8, has no space at either
+  *     end and does not start with univocity's comment char `#`, and holds
+  *     no quote, escape or control byte (CR and LF among them). It is
+  *     copied, in quotes when it holds the delimiter;
+  *   - a long, int, short or byte; a boolean; a float or double (as
+  *     `Float`/`Double.toString`, `NaN` and `Infinity` included);
+  *   - a date in years 1 to 9999, as `yyyy-MM-dd`.
+  * A null field is empty. These are the bytes univocity writes for such a
+  * row under the default write settings: it trims blanks at the ends, writes
+  * `""` for an empty string, and quotes and escapes the rest.
+  */
+private[graft] final class CsvLineWriter(path: String, schema: StructType, kinds: Array[Int],
+    context: TaskAttemptContext, params: CSVOptions) extends LineWriter(path, context) {
+  import LineWriter._
+
+  private val gen = new UnivocityGenerator(schema, text, params)
+  if (params.headerFlag) {
+    gen.writeHeaders()
+    pending = true
+  }
+  private val settings = params.asWriterSettings.getFormat
+  private val delim = params.delimiter.charAt(0).toByte
+  private val quote = params.quote.toByte
+  private val comment = settings.getComment.toByte
+  private val lineSep = settings.getLineSeparatorString.getBytes(StandardCharsets.UTF_8)
+  private val byteKind = {
+    val k = byteKinds(quote, params.escape.toByte)
+    k(delim & 0xFF) = Quote
+    k
+  }
+  // which strings of the row `accepts` last took hold the delimiter
+  private val quoted = new Array[Boolean](kinds.length)
+
+  override private[graft] def accepts(row: InternalRow): Boolean = {
+    var any = false
+    var i = 0
+    while (i < kinds.length) {
+      if (!row.isNullAt(i)) {
+        any = true
+        val ok = kinds(i) match {
+          case Str => plainString(row.getUTF8String(i), i)
+          case Day => plainDay(row.getInt(i))
+          case _ => true
+        }
+        if (!ok) return false
+      }
+      i += 1
+    }
+    any
+  }
+
+  private def plainString(s: UTF8String, i: Int): Boolean = {
+    val n = s.numBytes
+    n > 0 && s.getByte(0) != ' ' && s.getByte(n - 1) != ' ' && s.getByte(0) != comment && {
+      val kind = scan(s, byteKind)
+      quoted(i) = kind == Quote
+      kind != Stop
+    }
+  }
+
+  override protected def format(row: InternalRow): Unit = {
+    var i = 0
+    while (i < kinds.length) {
+      if (i > 0) buf.put(delim)
+      if (!row.isNullAt(i)) kinds(i) match {
+        case Str =>
+          if (quoted(i)) buf.put(quote)
+          buf.utf8(row.getUTF8String(i))
+          if (quoted(i)) buf.put(quote)
+        case Day => buf.date(row.getInt(i))
+        case k => buf.scalar(row, i, k)
+      }
+      i += 1
+    }
+    buf.put(lineSep)
+  }
+
+  override protected def generate(row: InternalRow): Unit = gen.write(row)
+  override protected def flushGenerator(): Unit = gen.flush()
+  override protected def closeGenerator(): Unit = gen.close()
 }
 
 /** The byte-scan tokenizer and the per-line hit/miss split. */
@@ -225,7 +341,7 @@ private[graft] object CsvLineScan {
           while (i < n && b(i) != quote) {
             if (!stopQuoted(b(i) & 0xFF)) i += 1
             else {
-              i = skipUtf8(b, i, n)
+              i = if (asciiOnly) -1 else skipUtf8(b, i, n)
               if (i < 0) return false
             }
           }
@@ -238,7 +354,7 @@ private[graft] object CsvLineScan {
           while (i < n && b(i) != delim) {
             if (!stopUnquoted(b(i) & 0xFF)) i += 1
             else {
-              i = skipUtf8(b, i, n)
+              i = if (asciiOnly) -1 else skipUtf8(b, i, n)
               if (i < 0) return false
             }
           }
@@ -250,27 +366,24 @@ private[graft] object CsvLineScan {
       }
       false // more fields than the schema
     }
+  }
 
-    /** The index after the valid UTF-8 sequence at `i`, or -1 for a byte
-      * outside the grammar: an ASCII stop byte (quote, escape, NUL), any
-      * non-ASCII byte when `asciiOnly`, or a malformed, overlong, surrogate
-      * or out-of-range sequence (those decode to U+FFFD, which no byte copy
-      * matches). */
-    private def skipUtf8(b: Array[Byte], i: Int, n: Int): Int = {
-      val c = b(i) & 0xFF
-      if (c < 0x80 || asciiOnly) return -1
-      def cont(k: Int, lo: Int = 0x80, hi: Int = 0xBF): Boolean =
-        k < n && (b(k) & 0xFF) >= lo && (b(k) & 0xFF) <= hi
-      if (c >= 0xC2 && c <= 0xDF) { if (cont(i + 1)) i + 2 else -1 }
-      else if (c >= 0xE0 && c <= 0xEF) {
-        val ok2 = if (c == 0xE0) cont(i + 1, 0xA0) else if (c == 0xED) cont(i + 1, hi = 0x9F)
-          else cont(i + 1)
-        if (ok2 && cont(i + 2)) i + 3 else -1
-      } else if (c >= 0xF0 && c <= 0xF4) {
-        val ok2 = if (c == 0xF0) cont(i + 1, 0x90) else if (c == 0xF4) cont(i + 1, hi = 0x8F)
-          else cont(i + 1)
-        if (ok2 && cont(i + 2) && cont(i + 3)) i + 4 else -1
-      } else -1
-    }
+  /** The index after the valid UTF-8 sequence at `i`, or -1 for an ASCII
+    * byte or a malformed, overlong, surrogate or out-of-range sequence
+    * (those decode to U+FFFD, which no byte copy matches). */
+  def skipUtf8(b: Array[Byte], i: Int, n: Int): Int = {
+    val c = b(i) & 0xFF
+    def cont(k: Int, lo: Int = 0x80, hi: Int = 0xBF): Boolean =
+      k < n && (b(k) & 0xFF) >= lo && (b(k) & 0xFF) <= hi
+    if (c >= 0xC2 && c <= 0xDF) { if (cont(i + 1)) i + 2 else -1 }
+    else if (c >= 0xE0 && c <= 0xEF) {
+      val ok2 = if (c == 0xE0) cont(i + 1, 0xA0) else if (c == 0xED) cont(i + 1, hi = 0x9F)
+        else cont(i + 1)
+      if (ok2 && cont(i + 2)) i + 3 else -1
+    } else if (c >= 0xF0 && c <= 0xF4) {
+      val ok2 = if (c == 0xF0) cont(i + 1, 0x90) else if (c == 0xF4) cont(i + 1, hi = 0x8F)
+        else cont(i + 1)
+      if (ok2 && cont(i + 2) && cont(i + 3)) i + 4 else -1
+    } else -1
   }
 }

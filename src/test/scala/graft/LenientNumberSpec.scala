@@ -17,8 +17,10 @@ import graft.functions.{Lenient, LenientChain}
   * strings generated from a fixed seed, for both casts, warn off and on, and
   * default and swapped separators. Values compare bit for bit
   * (`doubleToRawLongBits`, so -0.0 is not 0.0); in warn mode the kernel must
-  * raise exactly where the chain raises, with the same message. Which
-  * strings the scan answers itself is pinned on two fixed lists.
+  * raise exactly where the chain raises, with the same message. The query
+  * form runs compiled (whole-stage codegen) and interpreted, with the same
+  * values. Which strings the scan answers itself is pinned on two fixed
+  * lists.
   */
 class LenientNumberSpec extends SparkSpec {
 
@@ -138,11 +140,18 @@ class LenientNumberSpec extends SparkSpec {
       val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2),
         StructType(Seq(StructField("i", IntegerType),
           StructField("x", StringType))))
-      val got = df.select(col("i"), kernel.as("k"), chain.as("c")).collect()
-      assert(got.length == ok.size)
-      val diff = got.filterNot(r => same(Right(r.get(1)), Right(r.get(2))))
-      assert(diff.isEmpty, s"$label (query): " +
-        diff.take(8).map(r => s"'${ok(r.getInt(0))}' kernel=${r.get(1)} chain=${r.get(2)}").mkString("; "))
+      // compiled and interpreted, each against the chain and against each other
+      val (compiled, interpreted) =
+        compiledAndInterpreted(df.select(col("i"), kernel.as("k"), chain.as("c")).collect())
+      for ((mode, got) <- Seq("compiled" -> compiled, "interpreted" -> interpreted)) {
+        assert(got.length == ok.size)
+        val diff = got.filterNot(r => same(Right(r.get(1)), Right(r.get(2))))
+        assert(diff.isEmpty, s"$label ($mode query): " +
+          diff.take(8).map(r => s"'${ok(r.getInt(0))}' kernel=${r.get(1)} chain=${r.get(2)}").mkString("; "))
+      }
+      val byI = interpreted.map(r => r.getInt(0) -> r.get(1)).toMap
+      assert(compiled.forall(r => same(Right(r.get(1)), Right(byI(r.getInt(0))))),
+        s"$label: compiled and interpreted kernels differ")
     }
   }
 

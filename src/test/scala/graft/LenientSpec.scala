@@ -108,18 +108,27 @@ class LenientSpec extends SparkSpec {
     }
   }
 
+  /** `values` as a one-partition string column `x` over an RDD, so the
+    * optimizer cannot fold a projection of it into a local relation. */
+  private def distributed(values: Seq[String], name: String = "x") =
+    spark.createDataFrame(spark.sparkContext.parallelize(values.map(Tuple1(_)), 1)).toDF(name)
+
   test("lenient datetime expressions run distributed (convert.py:316-510)") {
-    val df = Seq("5/4/82 2:00 pm", "2/32/82 12:15", "spam").toDF("x")
-    val got = df.select(
+    val df = distributed(Seq("5/4/82 2:00 pm", "2/32/82 12:15", "spam", null))
+    val (compiled, interpreted) = compiledAndInterpreted(df.select(
       LenientDatetimeExpr.lenientTimestamp(x).cast("string").as("ts"),
       LenientDatetimeExpr.lenientDate(x).cast("string").as("d"),
-      LenientDatetimeExpr.lenientTime(x).as("t")).collect()
+      LenientDatetimeExpr.lenientTime(x).as("t")).collect().toSeq)
+    assert(compiled == interpreted)
+    val got = compiled
     assert(got(0).getString(0) == "1982-05-04 14:00:00")
     assert(got(1).getString(0) == "1982-02-28 12:15:00")
     assert(got(2).getString(0) == "9999-12-31 00:00:00")
     assert(got(0).getString(1) == "1982-05-04")
     assert(got(0).getString(2) == "14:00:00")
     assert(got(2).getString(2) == "00:00:00")
+    // a null input takes the kernels' null defaults
+    assert(got(3).toSeq == Seq("9999-12-31 00:00:00", "9999-12-31", "00:00:00"))
   }
 
   test("dayfirst threads through the expression") {
@@ -136,12 +145,14 @@ class LenientSpec extends SparkSpec {
       "13/05/2024", "2029-01-29", " 2024-01-16", "2024-01-16 ", "01-16-2024",
       "2024/01/16", "2024-001-16", "2023-02-29", "2030-02-30", "2024-13-01",
       "2024-00-10", "01/01/0001", "5/4/82", "2024-01-16 14:00", "spam", "", null)
-    val df = in.toDF("d")
+    val df = distributed(in, "d")
     for (dayFirst <- Seq(false, true)) {
-      val got = DetectTypes.typeCast(df, Seq(DetectTypes.FieldType("d", "date")),
-        dayFirst = dayFirst).select(col("d").cast("string")).collect().map(_.getString(0))
+      val (compiled, interpreted) = compiledAndInterpreted(
+        DetectTypes.typeCast(df, Seq(DetectTypes.FieldType("d", "date")), dayFirst = dayFirst)
+          .select(col("d").cast("string")).collect().map(_.getString(0)).toSeq)
       val want = in.map(DateParser.toDate(_, dayFirst).toString)
-      assert(got.toSeq == want, s"dayFirst=$dayFirst")
+      assert(compiled == want, s"dayFirst=$dayFirst compiled")
+      assert(interpreted == want, s"dayFirst=$dayFirst interpreted")
     }
   }
 }

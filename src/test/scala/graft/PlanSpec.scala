@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.pipeline.{Dedup, Similarity}
 import graft.queries.Registry
+import graft.sources.Readers
+import graft.types.DetectTypes
 
 /** Plan-shape regression guard: the properties SCALE.md claims are asserted
   * against the actual optimized plans, so a future refactor cannot silently
@@ -1230,5 +1232,28 @@ class PlanSpec extends SparkSpec {
       assert(p.linesIterator.drop(wIdx).exists(_.contains("HashAggregate")),
         s"$q: midrank window must consume the cell rollup:\n$p")
     }
+  }
+
+  test("typeCast over Readers.csv: the lenient cast Project sits inside the scan's " +
+    "whole-stage-codegen stage") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-cast")
+    val csv = dir.resolve("in.csv")
+    java.nio.file.Files.writeString(csv,
+      "id,amount,day,at,clock,note\n7,\"$1,234.50\",2024-01-16,2024-01-16 10:00,10:00,\"a, b\"\n")
+    val cast = DetectTypes.typeCast(Readers.csv(spark, csv.toString),
+      Seq("id" -> "int", "amount" -> "float", "day" -> "date", "at" -> "datetime",
+        "clock" -> "time", "note" -> "text").map { case (c, t) => DetectTypes.FieldType(c, t) })
+    val plan = cast.queryExecution.executedPlan
+    val lenient = Set("lenient_number", "lenient_date", "lenient_timestamp", "lenient_time")
+    def casts(p: org.apache.spark.sql.execution.SparkPlan) = p.collect {
+      case x: org.apache.spark.sql.execution.ProjectExec
+        if x.projectList.exists(_.exists(e => lenient(e.prettyName))) => x
+    }
+    val compiled = plan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => casts(w.child)
+    }.flatten
+    assert(casts(plan).size == 1 && compiled.size == 1,
+      s"the cast Project is not in a codegen stage:\n$plan")
+    assert(cast.collect().length == 1)
   }
 }

@@ -88,6 +88,22 @@ class ReadersSpec extends SparkSpec {
     }
   }
 
+  test("read_csv's windowed path drops the header of every part file, decoded or not") {
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row("1", "a"), Row("2", "b"), Row("3", "c"), Row("4", "d")), 3),
+      org.apache.spark.sql.types.StructType(Seq("k", "t").map(
+        org.apache.spark.sql.types.StructField(_, org.apache.spark.sql.types.StringType))))
+    val dir = java.nio.file.Files.createTempDirectory("graft-csv-parts").resolve("out").toString
+    Writers.csv(df, dir)
+    val fast = Readers.csv(spark, dir)
+    assert(fast.count() == 4)
+    for (enc <- Seq(None, Some("windows-1252"))) {
+      val windowed = Readers.csv(spark, dir, Readers.CsvOptions(firstCol = 1, encoding = enc))
+      assert(windowed.columns.toSeq == Seq("t"), enc)
+      assert(windowed.collect().map(_.getString(0)).sorted.toSeq == Seq("a", "b", "c", "d"), enc)
+    }
+  }
+
   test("read_fixed_fmt: offsets + header, raw names kept (golden)") {
     val df = Readers.fixedWidth(spark, s"$fx/fixed_w_header.txt",
       starts = Seq(0, 18, 29, 33, 38, 50), hasHeader = true)

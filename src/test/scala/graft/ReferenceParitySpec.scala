@@ -190,6 +190,14 @@ class ReferenceParitySpec extends SparkSpec {
     assert(json.contains(""""crs": {"type": "name", "properties": {"name": "EPSG:4269"}}"""))
   }
 
+  test("the crs name is escaped as a JSON string: quotes and backslashes parse back") {
+    val df = graft.sources.GeoJson.read(spark, "src/test/resources/fixtures/points.geojson")
+    val name = "urn:\"odd\"\\name\\ é"
+    val doc = org.json4s.jackson.JsonMethods.parse(
+      graft.sources.GeoJson.collectionString(df, crs = Some(name)))
+    assert((doc \ "crs" \ "properties" \ "name") == org.json4s.JString(name))
+  }
+
   test("test_is_int / test_is_bool / test_is_null (test_fntools.py:54-75)") {
     val df = Seq("x").toDF("x")
     def one(c: Column): Row = df.select(c).head()

@@ -17,6 +17,22 @@ trait SparkSpec extends AnyFunSuite {
     spark.sparkContext.setCheckpointDir(dir.toString)
     try f(dir) finally spark.sparkContext.setCheckpointDir(null)
   }
+
+  /** `f` run compiled, then interpreted: first with whole-stage codegen and
+    * codegen-only factories, where a compile error raises instead of falling
+    * back to interpretation; then with neither, so every expression runs its
+    * `eval`. The session's settings are restored after each run. */
+  def compiledAndInterpreted[T](f: => T): (T, T) = {
+    def under(confs: (String, String)*): T = {
+      val old = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try f finally old.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    }
+    (under("spark.sql.codegen.wholeStage" -> "true",
+       "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false"),
+     under("spark.sql.codegen.wholeStage" -> "false",
+       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
+  }
 }
 
 object SparkSpec {
