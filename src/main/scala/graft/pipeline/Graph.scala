@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 
 import graft.operators.Ops
 
@@ -20,6 +21,14 @@ import graft.operators.Ops
   * DuckDB oracle unrolls the same recurrence in SQL). Floor division leaks
   * ≤1 micro-unit per term per round — a documented, deterministic variant
   * of the 0.85-damped walk, not an approximation that drifts.
+  *
+  * SHARED SHAPES: each relational shape is written once, as a private
+  * helper the operators call — `dampedWalk` (both PageRanks), `minPlus`
+  * (the relaxation of SSSP and harmonic centrality), `bothWays` (the
+  * two-direction adjacency (u,v) ∪ (v,u)), `withEndDegrees` (the
+  * endpoint-degree join), `triangleTally` (per-node triangle counts),
+  * `wedgeScores` (the capped common-neighbor wedges of link prediction)
+  * and `degreeMoments` (the exact stub-moment degree r).
   */
 object Graph {
 
@@ -32,7 +41,45 @@ object Graph {
     * sink-leak variant). Returns (node, rank_micro, rank) with rank = the
     * 6dp-rounded double image of the integer fixed point. */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int): DataFrame = {
+               iters: Int): DataFrame =
+    // every node restarts: the flag is a literal Catalyst folds away, so the
+    // plan carries no seed join
+    dampedWalk(edges, srcCol, dstCol, iters)(
+      nodes => (nodes.withColumn("__isSeed", lit(true)), nodes))
+
+  /** Personalized PageRank: the damped walk restarts into the SEED SET
+    * instead of everywhere — rank becomes proximity TO the seeds (related
+    * items for a user's history, neighborhood expansion around flagged
+    * accounts, topic-conditioned centrality). Identical integer recurrence
+    * to [[pageRank]] with one change: the teleport term
+    * (3·10¹²) div (20·|S|) pays out only to seed nodes (non-seeds get 0 —
+    * their mass arrives through edges). Seeds must be nodes of the graph
+    * (off-graph seeds are ignored by construction: the node relation comes
+    * from the edges). Starting rank is uniform over seeds, zero elsewhere
+    * (the standard restart distribution, exact in integers).
+    * Same checkpoint/shuffle-hash discipline; the seed relation is one
+    * broadcast semi-join flag. Returns (node, rank_micro, rank). */
+  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
+                           seeds: DataFrame, seedCol: String,
+                           iters: Int): DataFrame =
+    dampedWalk(edges, srcCol, dstCol, iters) { nodes =>
+      val seedNodes = nodes.join(
+        broadcast(seeds.select(col(seedCol).as("node")).distinct()),
+        Seq("node"), "semi")
+      val flagged = nodes.join(
+        broadcast(seedNodes.withColumn("__isSeed", lit(true))),
+        Seq("node"), "left")
+        .select(col("node"), coalesce(col("__isSeed"), lit(false)).as("__isSeed"))
+      (flagged, seedNodes)
+    }
+
+  /** The integer damped walk behind both PageRanks. `restarts` maps the
+    * node relation to the walk's spine — every node with its `__isSeed`
+    * restart flag — and the restart set, whose size |S| sets the start
+    * rank 10¹² div |S| and the teleport (3·10¹²) div (20·|S|) paid to
+    * flagged nodes. Which caller runs is data, never a branch. */
+  private def dampedWalk(edges: DataFrame, srcCol: String, dstCol: String, iters: Int)(
+      restarts: DataFrame => (DataFrame, DataFrame)): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
     // checkpoint discipline = connectedComponents': the edge relation
     // materializes ONCE (every round joins it), each round's rank cuts its
@@ -50,11 +97,13 @@ object Graph {
     // e0's eager cut also measured slower — its four consumers re-ran the
     // distinct's post-exchange agg: 3.2 -> 7.3 s.)
     val e = Ops.materialize(e0.join(deg, Seq("src")))
-    // one scalar row: N and the teleport term (3*10^12) div (20*N)
-    val n = nodes.agg(count(lit(1)).as("__n"))
+    val (spine, restartSet) = restarts(nodes)
+    // one scalar row: |S| and the teleport term (3*10^12) div (20*|S|)
+    val n = restartSet.agg(count(lit(1)).as("__n"))
       .select(col("__n"), expr(s"(3 * ${Scale}L) div (20 * __n)").as("__tp"))
-    var rank = nodes.crossJoin(broadcast(n))
-      .select(col("node"), expr(s"${Scale}L div __n").as("r"))
+    val seed = col("__isSeed")
+    var rank = spine.crossJoin(broadcast(n))
+      .select(col("node"), when(seed, expr(s"${Scale}L div __n")).otherwise(lit(0L)).as("r"))
     var rankCut: Option[DataFrame] = None
     for (i <- 1 to iters) {
       // SHUFFLE_HASH on the rank side: ranks are |V| rows against |E|
@@ -66,17 +115,17 @@ object Graph {
         .groupBy("node").agg(sum(col("c")).as("__in"))
       // spine = the STATIC node relation, not rank_prev (r15 optimization,
       // guide §7.2 "duplicated subtrees"): every round's rank covers
-      // exactly the `nodes` set (the left join keeps all spine rows), but
-      // a rank_prev spine makes each round's plan reference rank_prev
+      // exactly the spine's node set (the left join keeps all spine rows),
+      // but a rank_prev spine makes each round's plan reference rank_prev
       // TWICE (contrib + spine), duplicating the un-exchanged tail of
       // every earlier round's join 2^rounds times. A static spine keeps
       // rank_prev referenced once — the plan is linear in `iters`
       // (measured 5.5 -> 2.9 s on q136 at iters=3).
-      rank = nodes
+      rank = spine
         .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
         .crossJoin(broadcast(n))
-        .select(col("node"),
-          (col("__tp") + expr("(17 * coalesce(__in, 0L)) div 20")).as("r"))
+        .select(col("node"), (when(seed, col("__tp")).otherwise(lit(0L)) +
+          expr("(17 * coalesce(__in, 0L)) div 20")).as("r"))
       // rank lineage only needs a cut every few rounds: within a window the
       // nested joins stay one job whose repeated e-exchanges collapse to
       // ReusedExchange and whose sizes AQE can see (an EAGER cut per round
@@ -87,85 +136,10 @@ object Graph {
         rankCut = Some(rank)
       }
     }
-    rank.crossJoin(broadcast(n))
-      .select(col("node"), col("r").as("rank_micro"),
-        round(col("r").cast("double") / lit(Scale.toDouble), 6).as("rank"))
-  }
-
-  /** Personalized PageRank: the damped walk restarts into the SEED SET
-    * instead of everywhere — rank becomes proximity TO the seeds (related
-    * items for a user's history, neighborhood expansion around flagged
-    * accounts, topic-conditioned centrality). Identical integer recurrence
-    * to [[pageRank]] with one change: the teleport term
-    * (3·10¹²) div (20·|S|) pays out only to seed nodes (non-seeds get 0 —
-    * their mass arrives through edges). Seeds must be nodes of the graph
-    * (off-graph seeds are ignored by construction: the node relation comes
-    * from the edges). Starting rank is uniform over seeds, zero elsewhere
-    * (the standard restart distribution, exact in integers).
-    * Same checkpoint/shuffle-hash discipline; the seed relation is one
-    * broadcast semi-join flag. Returns (node, rank_micro, rank). */
-  def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
-                           seeds: DataFrame, seedCol: String,
-                           iters: Int): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
-    val e0 = Ops.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .distinct())
-    val nodes = e0.select(col("src").as("node"))
-      .union(e0.select(col("dst").as("node"))).distinct()
-    val deg = e0.groupBy("src").agg(count(lit(1)).as("deg"))
-    val e = Ops.materialize(e0.join(deg, Seq("src")))
-    val seedNodes = nodes.join(
-      broadcast(seeds.select(col(seedCol).as("node")).distinct()),
-      Seq("node"), "semi")
-    val flagged = nodes.join(
-      broadcast(seedNodes.withColumn("__isSeed", lit(true))),
-      Seq("node"), "left")
-      .select(col("node"), coalesce(col("__isSeed"), lit(false)).as("__isSeed"))
-    val n = seedNodes.agg(count(lit(1)).as("__ns"))
-      .select(col("__ns"), expr(s"(3 * ${Scale}L) div (20 * __ns)").as("__tp"))
-    var rank = flagged.crossJoin(broadcast(n))
-      .select(col("node"), col("__isSeed"),
-        when(col("__isSeed"), expr(s"${Scale}L div __ns"))
-          .otherwise(lit(0L)).as("r"))
-    var rankCut: Option[DataFrame] = None
-    for (i <- 1 to iters) {
-      val contrib = rank.hint("shuffle_hash")
-        .join(e, rank("node") === e("src"))
-        .select(col("dst").as("node"), expr("r div deg").as("c"))
-        .groupBy("node").agg(sum(col("c")).as("__in"))
-      // static spine (`flagged` covers every node with its seed flag, the
-      // exact row set of every round's rank) — see pageRank's spine note
-      rank = flagged
-        .join(contrib.hint("shuffle_hash"), Seq("node"), "left")
-        .crossJoin(broadcast(n))
-        .select(col("node"), col("__isSeed"),
-          (when(col("__isSeed"), col("__tp")).otherwise(lit(0L)) +
-            expr("(17 * coalesce(__in, 0L)) div 20")).as("r"))
-      if (i % 5 == 0 && i < iters) {
-        rank = Ops.materialize(rank, rankCut.toSeq: _*)
-        rankCut = Some(rank)
-      }
-    }
     rank.select(col("node"), col("r").as("rank_micro"),
       round(col("r").cast("double") / lit(Scale.toDouble), 6).as("rank"))
   }
 
-  /** Per-node triangle counts of the undirected graph given as an edge list
-    * (either direction, duplicates fine). The classic degree-ordered
-    * formulation (Cohen 2009; Suri & Vassilvitskii 2011): canonicalize each
-    * edge, then ORIENT it from its lower (degree, id) endpoint to the
-    * higher, so every wedge is enumerated at its lowest-degree corner —
-    * out-degrees are bounded by O(sqrt(|E|)) regardless of how hot a hub
-    * is, which is exactly the skew guard a web-scale graph needs (a naive
-    * id-oriented wedge join puts a d² blowup on the highest-degree node).
-    * Each triangle is found exactly once (its two lowest-(deg,id) corners
-    * emit the wedge, the closing edge check is oriented), then exploded to
-    * its three corners and counted per node.
-    *
-    * Three co-keyed joins + one aggregate — no window, no cartesian; the
-    * count is orientation-invariant, so an oracle may enumerate a<b<c
-    * instead and must agree exactly.
-    */
   /** Canonical undirected simple-edge relation: (a, b) with a < b, loops
     * and duplicates (either direction) dropped. CHECKPOINTED (the pageRank
     * lineage discipline): degrees, orientation, and both wedge-join sides
@@ -183,15 +157,27 @@ object Graph {
       .union(und.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
 
+  /** Both directions of an undirected (a, b) relation as (u, v) ∪ (v, u)
+    * under the names `u` and `v`, `carry` columns riding along, so a
+    * node's neighbors are one equi join away. */
+  private def bothWays(und: DataFrame, u: String, v: String, carry: String*): DataFrame = {
+    def side(from: String, to: String) =
+      und.select(col(from).as(u) +: col(to).as(v) +: carry.map(col): _*)
+    side("a", "b").union(side("b", "a"))
+  }
+
+  /** `rows` keyed (a, b) with both endpoints' degrees joined on co-keyed
+    * as `da` and `db` — two hash joins, |rows| work, no degree² pairs. */
+  private def withEndDegrees(rows: DataFrame, deg: DataFrame): DataFrame =
+    rows.join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
+      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
+
   /** Degree-oriented edge relation (u → v with (deg,id)(u) < (deg,id)(v)),
     * materialized once — it feeds both wedge-join sides AND the closing-
     * edge probe. */
   private def orientedOf(und: DataFrame, deg: DataFrame): DataFrame = {
-    val withDeg = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
     val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    Ops.materialize(withDeg.select(
+    Ops.materialize(withEndDegrees(und, deg).select(
       when(aFirst, col("a")).otherwise(col("b")).as("u"),
       when(aFirst, col("b")).otherwise(col("a")).as("v"),
       when(aFirst, col("db")).otherwise(col("da")).as("dv")))
@@ -216,11 +202,32 @@ object Graph {
       .hint("shuffle_hash"), Seq("x", "y"))
   }
 
-  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = canonEdges(edges, srcCol, dstCol)
-    triCorners(orientedOf(und, degrees(und)))
+  /** Per-node triangle count (node, n_tri): each triangle of
+    * [[triCorners]] exploded to its three corners. */
+  private def triangleTally(und: DataFrame, deg: DataFrame): DataFrame =
+    triCorners(orientedOf(und, deg))
       .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_tri"))
+
+  /** Per-node triangle counts of the undirected graph given as an edge list
+    * (either direction, duplicates fine). The classic degree-ordered
+    * formulation (Cohen 2009; Suri & Vassilvitskii 2011): canonicalize each
+    * edge, then ORIENT it from its lower (degree, id) endpoint to the
+    * higher, so every wedge is enumerated at its lowest-degree corner —
+    * out-degrees are bounded by O(sqrt(|E|)) regardless of how hot a hub
+    * is, which is exactly the skew guard a web-scale graph needs (a naive
+    * id-oriented wedge join puts a d² blowup on the highest-degree node).
+    * Each triangle is found exactly once (its two lowest-(deg,id) corners
+    * emit the wedge, the closing edge check is oriented), then exploded to
+    * its three corners and counted per node.
+    *
+    * Three co-keyed joins + one aggregate — no window, no cartesian; the
+    * count is orientation-invariant, so an oracle may enumerate a<b<c
+    * instead and must agree exactly.
+    */
+  def triangleCounts(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+    val und = canonEdges(edges, srcCol, dstCol)
+    triangleTally(und, degrees(und))
   }
 
   /** Local clustering coefficient per node of degree ≥ 2:
@@ -234,11 +241,8 @@ object Graph {
                              dstCol: String): DataFrame = {
     val und = canonEdges(edges, srcCol, dstCol)
     val deg = degrees(und)
-    val tri = triCorners(orientedOf(und, deg))
-      .select(explode(array(col("u"), col("x"), col("y"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
     deg.filter(col("deg") >= 2)
-      .join(tri, Seq("node"), "left")
+      .join(triangleTally(und, deg), Seq("node"), "left")
       .select(col("node"), col("deg"),
         coalesce(col("n_tri"), lit(0L)).as("n_tri"),
         round(lit(2.0) * coalesce(col("n_tri"), lit(0L)) /
@@ -292,8 +296,7 @@ object Graph {
     require(maxHops >= 1 && maxHops <= 20, s"maxHops out of range: $maxHops")
     val und = canonEdges(edges, srcCol, dstCol)
     // both directions once, so a frontier expands with ONE equi join
-    val adj = Ops.materialize(und.select(col("a").as("u"), col("b").as("v"))
-      .union(und.select(col("b").as("u"), col("a").as("v"))))
+    val adj = Ops.materialize(bothWays(und, "u", "v"))
     var visited = seeds.select(col(seedCol).as("node")).distinct()
       .select(col("node"), lit(0).as("hops"))
     var frontier = visited.select("node")
@@ -334,16 +337,25 @@ object Graph {
         col(weightCol).cast("long").as("w"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .groupBy("a", "b").agg(min(col("w")).as("w"))
-    val adj = Ops.materialize(e.select(col("a").as("u"), col("b").as("v"), col("w"))
-      .union(e.select(col("b").as("u"), col("a").as("v"), col("w"))))
-    var dist = seeds.select(col(seedCol).as("node")).distinct()
+    val dist = seeds.select(col(seedCol).as("node")).distinct()
       .select(col("node"), lit(0L).as("dist"))
+    minPlus(Ops.materialize(bothWays(e, "u", "v", "w")), dist, Nil, col("w"), rounds)
+  }
+
+  /** `rounds` rounds of min-plus relaxation from `dist` (keys..., node,
+    * dist) over the two-way adjacency (u, v, ...): each round extends every
+    * reached path by one edge at cost `step` and keeps the minimum per
+    * (keys..., node) — exact integer sums, so min() is engine-exact.
+    * Per round: one node-keyed hash join + one min-aggregate. */
+  private def minPlus(adj: DataFrame, dist0: DataFrame, keys: Seq[String],
+                      step: Column, rounds: Int): DataFrame = {
+    var dist = dist0
     for (r <- 1 to rounds) {
       val relaxed = dist.hint("shuffle_hash")
         .join(adj, dist("node") === adj("u"))
-        .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
+        .select(keys.map(col) :+ col("v").as("node") :+ (col("dist") + step).as("dist"): _*)
       val next = dist.unionByName(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
+        .groupBy((keys :+ "node").map(col): _*).agg(min(col("dist")).as("dist"))
       // the last round stays un-checkpointed: the caller's action
       // materializes it anyway, and its plan (join shape, aggregate) stays
       // inspectable; a cut supersedes the previous round's
@@ -371,25 +383,14 @@ object Graph {
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                          seeds: DataFrame, seedCol: String,
                          rounds: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(rounds >= 1 && rounds <= 10, s"rounds out of range: $rounds")
     val e = edges.select(col(srcCol).as("a"), col(dstCol).as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .distinct()
-    val adj = Ops.materialize(e.select(col("a").as("u"), col("b").as("v"))
-      .union(e.select(col("b").as("u"), col("a").as("v"))))
-    var dist = seeds.select(col(seedCol).as("seed")).distinct()
+    val dist = seeds.select(col(seedCol).as("seed")).distinct()
       .select(col("seed"), col("seed").as("node"), lit(0L).as("dist"))
-    for (r <- 1 to rounds) {
-      val relaxed = dist.hint("shuffle_hash")
-        .join(adj, dist("node") === adj("u"))
-        .select(col("seed"), col("v").as("node"),
-          (col("dist") + lit(1L)).as("dist"))
-      val next = dist.unionByName(relaxed)
-        .groupBy("seed", "node").agg(min(col("dist")).as("dist"))
-      dist = if (r < rounds) Ops.materialize(next, dist) else next
-    }
-    dist.filter(col("dist") > 0)
+    minPlus(Ops.materialize(bothWays(e, "u", "v")), dist, Seq("seed"), lit(1L), rounds)
+      .filter(col("dist") > 0)
       .groupBy("seed")
       .agg(count(lit(1)).as("n_reached"),
         sum((lit(1.0) / col("dist").cast("double"))
@@ -453,7 +454,6 @@ object Graph {
     * with per-side (score DESC, node ASC) order decided by the caller. */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(iters >= 1 && iters <= 5, s"iters out of range: $iters")
     val e = Ops.materialize(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct())
@@ -489,11 +489,12 @@ object Graph {
     * sufficient statistic is an exact integer (DECIMAL sums of degree
     * products; triangles from the same degree-oriented enumeration as
     * [[triangleCounts]]); each output is one fixed-shape IEEE closed
-    * form, 6dp. Returns one row: (n_nodes, n_edges, n_wedges,
-    * n_triangles, global_cc, assortativity). */
+    * form, 6dp. A graph without wedges has a null global_cc, and a regular
+    * one (no degree variance) a null assortativity — [[assortativity]]'s
+    * r. Returns one row: (n_nodes, n_edges, n_wedges, n_triangles,
+    * global_cc, assortativity). */
   def graphSummary(edges: DataFrame, srcCol: String,
                    dstCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val und = canonEdges(edges, srcCol, dstCol)
     val deg = degrees(und)
     val tri = triCorners(orientedOf(und, deg))
@@ -501,29 +502,13 @@ object Graph {
     val degStats = deg.agg(count(lit(1)).as("n_nodes"),
       sum((col("deg") * (col("deg") - 1)).cast(DecimalType(38, 0)))
         .as("__w2")) // 2W: deg·(deg−1) sums are even
-    // stub moments from the single-edge relation: over ordered stubs
-    // Σx = Σ(da+db), Σx² = Σ(da²+db²), Σxy = 2Σ(da·db), M = 2|E|
-    val stubs = und
-      .join(deg.select(col("node").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("db")), Seq("b"))
-      .agg(count(lit(1)).as("n_edges"),
-        sum((col("da") + col("db")).cast(DecimalType(38, 0))).as("sx"),
-        sum((col("da") * col("da") + col("db") * col("db"))
-          .cast(DecimalType(38, 0))).as("sxx"),
-        sum((col("da") * col("db")).cast(DecimalType(38, 0))).as("sab"))
-    tri.crossJoin(degStats).crossJoin(stubs)
+    tri.crossJoin(degStats).crossJoin(degreeMoments(und, deg))
       .select(col("n_nodes"), col("n_edges"),
         (col("__w2") / 2).cast("long").as("n_wedges"),
         col("n_triangles"),
-        round(lit(3.0) * col("n_triangles").cast("double") /
-          (col("__w2").cast("double") / 2.0), 6).as("global_cc"),
-        round((lit(2.0) * col("n_edges").cast("double") *
-          (lit(2.0) * col("sab").cast("double")) -
-          col("sx").cast("double") * col("sx").cast("double")) /
-          (lit(2.0) * col("n_edges").cast("double") *
-            col("sxx").cast("double") -
-            col("sx").cast("double") * col("sx").cast("double")), 6)
-          .as("assortativity"))
+        round(when(col("__w2") =!= 0, lit(3.0) * col("n_triangles").cast("double") /
+          (col("__w2").cast("double") / 2.0)), 6).as("global_cc"),
+        col("r").as("assortativity"))
   }
   // ------------------------------------------------------------- modularity
   /** Newman modularity of a node→community partition over the undirected
@@ -547,7 +532,6 @@ object Graph {
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
                  labels: DataFrame, nodeCol: String,
                  labelCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val und = canonEdges(edges, srcCol, dstCol)
     val lab = labels.select(col(nodeCol).as("__n"), col(labelCol).as("__l"))
     val tagged = und
@@ -601,26 +585,31 @@ object Graph {
     * (a, b, common_neighbors, aa_score). */
   def adamicAdar(edges: DataFrame, srcCol: String, dstCol: String,
                  maxDegree: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(maxDegree >= 2, s"maxDegree must be >= 2: $maxDegree")
     val und = canonEdges(edges, srcCol, dstCol)
-    val adj = und.select(col("a").as("z"), col("b").as("x"))
-      .unionByName(und.select(col("b").as("z"), col("a").as("x")))
-    val okZ = degrees(und)
-      .filter(col("deg") >= 2 && col("deg") <= maxDegree)
+    wedgeScores(und, degrees(und), maxDegree, lit(1.0) / log(col("deg").cast("double")))
+      .select(col("a"), col("b"), col("common_neighbors"),
+        round(col("__w").cast("double"), 6).as("aa_score"))
+  }
+
+  /** The capped wedge enumeration of link prediction: every non-edge pair
+    * (a < b) with a common neighbor z of 2 ≤ deg(z) ≤ maxDegree, as
+    * (a, b, common_neighbors, __w) with __w = Σ_z weight, each term rounded
+    * to DECIMAL(28,12) before the sum; `weight` reads the column `deg`
+    * (= deg z). Existing edges leave via one co-keyed anti join. */
+  private def wedgeScores(und: DataFrame, deg: DataFrame, maxDegree: Int,
+                          weight: Column): DataFrame = {
+    val okZ = deg.filter(col("deg") >= 2 && col("deg") <= maxDegree)
       .select(col("node").as("z"), col("deg"))
-    val az = adj.join(okZ, Seq("z"))
-    val pairs = az.select(col("z"), col("x").as("a"), col("deg"))
+    val az = bothWays(und, "z", "x").join(okZ, Seq("z"))
+    az.select(col("z"), col("x").as("a"), col("deg"))
       .join(az.select(col("z"), col("x").as("b")).hint("shuffle_hash"),
         Seq("z"))
       .filter(col("a") < col("b"))
-    pairs.groupBy("a", "b")
+      .groupBy("a", "b")
       .agg(count(lit(1)).as("common_neighbors"),
-        sum((lit(1.0) / log(col("deg").cast("double")))
-          .cast(DecimalType(28, 12))).as("__aa"))
+        sum(weight.cast(DecimalType(28, 12))).as("__w"))
       .join(und, Seq("a", "b"), "anti")
-      .select(col("a"), col("b"), col("common_neighbors"),
-        round(col("__aa").cast("double"), 6).as("aa_score"))
   }
   // ------------------------------------------------------------- k-truss
   /** Bounded-round k-truss peeling: each round counts every edge's
@@ -679,26 +668,30 @@ object Graph {
     * DETERMINISM AND SCALE: degrees come from the canonical edge rollup;
     * the edge relation joins its two endpoint degrees CO-KEYED (two hash
     * joins, no window, no pairs blowup — work is |E|, not degree²).
-    * Orientation symmetry is exploited instead of materialized: with
-    * M = 2|E|, Σx = Σ(dᵤ+dᵥ), Σx² = Σ(dᵤ²+dᵥ²), Σxy = Σ2dᵤdᵥ, so
-    * r = (M·Σxy − Σx²ᵗᵉʳᵐ...) reduces to one DECIMAL(38,0)-exact
-    * aggregate finished by a fixed IEEE shape, 6dp (a 10-digit degree
-    * squares past 2^63 — the kruskal rule). Returns one row:
-    * (n_edges, r). */
+    * Orientation symmetry is exploited instead of materialized: the stub
+    * moments are sums over the single edges (see `degreeMoments`), one
+    * DECIMAL(38,0)-exact aggregate finished by a fixed IEEE shape, 6dp.
+    * Returns one row: (n_edges, r), r null on a regular graph. */
   def assortativity(edges: DataFrame, srcCol: String,
                     dstCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val dt = DecimalType(38, 0)
     val und = canonEdges(edges, srcCol, dstCol)
-    val deg = degrees(und)
-    val joined = und
-      .join(deg.select(col("node").as("a"), col("deg").as("__da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("__db")), Seq("b"))
-    val m = joined.agg(count(lit(1)).as("n_edges"),
-      sum((col("__da") + col("__db")).cast(dt)).as("__sx"),
-      sum(col("__da").cast(dt) * col("__da") +
-        col("__db").cast(dt) * col("__db")).as("__sxx"),
-      sum(col("__da").cast(dt) * col("__db") * 2L).as("__sxy"))
+    degreeMoments(und, degrees(und))
+  }
+
+  /** Newman's degree r from exact stub moments: with M = 2|E| ordered
+    * stubs, Σx = Σ(da+db), Σx² = Σ(da²+db²), Σxy = Σ2·da·db, each a
+    * DECIMAL(38,0) sum whose terms are cast before they multiply (a
+    * 10-digit degree squares past 2^63 — the kruskal rule), finished by
+    * r = (M·Σxy − (Σx)²) / (M·Σx² − (Σx)²) in one fixed IEEE shape, 6dp;
+    * null where the degrees have no variance (a regular graph). Returns
+    * one row: (n_edges, r). */
+  private def degreeMoments(und: DataFrame, deg: DataFrame): DataFrame = {
+    val dt = DecimalType(38, 0)
+    val m = withEndDegrees(und, deg).agg(count(lit(1)).as("n_edges"),
+      sum((col("da") + col("db")).cast(dt)).as("__sx"),
+      sum(col("da").cast(dt) * col("da") +
+        col("db").cast(dt) * col("db")).as("__sxx"),
+      sum(col("da").cast(dt) * col("db") * 2L).as("__sxy"))
     val mD = (col("n_edges") * 2L).cast("double")
     val sx = col("__sx").cast("double")
     val num = mD * col("__sxy").cast("double") - sx * sx
@@ -722,16 +715,12 @@ object Graph {
     * row per threshold: (k, n_nodes, n_edges, phi). */
   def richClub(edges: DataFrame, srcCol: String, dstCol: String,
                ks: Seq[Int] = Seq(1, 2, 4, 8, 16)): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(ks.nonEmpty && ks.forall(_ >= 0) && ks == ks.sorted,
       s"thresholds must be ascending and nonnegative: $ks")
     val und = canonEdges(edges, srcCol, dstCol)
     val deg = degrees(und)
-    val withDeg = und
-      .join(deg.select(col("node").as("a"), col("deg").as("__da")), "a")
-      .join(deg.select(col("node").as("b"), col("deg").as("__db")), "b")
-    val edgeCells = withDeg
-      .groupBy(least(col("__da"), col("__db")).as("__m"))
+    val edgeCells = withEndDegrees(und, deg)
+      .groupBy(least(col("da"), col("db")).as("__m"))
       .agg(count(lit(1)).as("__e"))
     val nodeCells = deg.groupBy(col("deg").as("__m"))
       .agg(count(lit(1)).as("__n"))
@@ -769,12 +758,9 @@ object Graph {
     * (deg, n_nodes, knn) 6dp. */
   def avgNeighborDegree(edges: DataFrame, srcCol: String,
                         dstCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val und = canonEdges(edges, srcCol, dstCol)
     val deg = degrees(und)
-    val adj = und.select(col("a").as("z"), col("b").as("x"))
-      .unionByName(und.select(col("b").as("z"), col("a").as("x")))
-    val perNode = adj
+    val perNode = bothWays(und, "z", "x")
       .join(deg.select(col("node").as("x"), col("deg").as("__dx")), "x")
       .groupBy("z")
       .agg(count(lit(1)).as("__dz"), sum(col("__dx")).as("__sum"))
@@ -805,31 +791,15 @@ object Graph {
     * Returns (a, b, common_neighbors, jaccard, ra_score). */
   def linkPredictionPanel(edges: DataFrame, srcCol: String, dstCol: String,
                           maxDegree: Int = 1000): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     require(maxDegree >= 2, s"maxDegree must be >= 2: $maxDegree")
     val und = canonEdges(edges, srcCol, dstCol)
     val deg = degrees(und)
-    val adj = und.select(col("a").as("z"), col("b").as("x"))
-      .unionByName(und.select(col("b").as("z"), col("a").as("x")))
-    val okZ = deg.filter(col("deg") >= 2 && col("deg") <= maxDegree)
-      .select(col("node").as("z"), col("deg"))
-    val az = adj.join(okZ, Seq("z"))
-    val pairs = az.select(col("z"), col("x").as("a"), col("deg"))
-      .join(az.select(col("z"), col("x").as("b")).hint("shuffle_hash"),
-        Seq("z"))
-      .filter(col("a") < col("b"))
-    pairs.groupBy("a", "b")
-      .agg(count(lit(1)).as("common_neighbors"),
-        sum((lit(1.0) / col("deg").cast("double"))
-          .cast(DecimalType(28, 12))).as("__ra"))
-      .join(und, Seq("a", "b"), "anti")
-      .join(deg.select(col("node").as("a"), col("deg").as("__da")), Seq("a"))
-      .join(deg.select(col("node").as("b"), col("deg").as("__db")), Seq("b"))
+    withEndDegrees(wedgeScores(und, deg, maxDegree, lit(1.0) / col("deg").cast("double")), deg)
       .select(col("a"), col("b"), col("common_neighbors"),
         round(col("common_neighbors").cast("double") /
-          (col("__da") + col("__db") - col("common_neighbors"))
+          (col("da") + col("db") - col("common_neighbors"))
             .cast("double"), 6).as("jaccard"),
-        round(col("__ra").cast("double"), 6).as("ra_score"))
+        round(col("__w").cast("double"), 6).as("ra_score"))
   }
 
   // --------------------------------------------- weighted reciprocity
@@ -883,7 +853,6 @@ object Graph {
   def attributeMixing(edges: DataFrame, srcCol: String, dstCol: String,
                       nodeAttrs: DataFrame, nodeCol: String,
                       attrCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val dt0 = DecimalType(38, 0)
     val und = canonEdges(edges, srcCol, dstCol)
     val attrs = nodeAttrs.select(col(nodeCol).as("__node"),

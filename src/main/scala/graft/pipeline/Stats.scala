@@ -1566,8 +1566,11 @@ object Stats {
     def rank2(c: String, out: String): DataFrame =
       midRanks2(base.groupBy(col(c)).agg(count(lit(1)).as("__cnt")), Nil, c,
         "spearman", out -> col("__cnt")).select(col(c), col(out))
-    val ranked = base.join(rank2("__a", "__x"), Seq("__a"))
-      .join(rank2("__b", "__y"), Seq("__b"))
+    // the gated rank cells are at most 10⁵ per axis: broadcast them to the
+    // rows (the gate's cross join inflates their size estimate, so an
+    // unhinted join builds on the row side inside the window's partition)
+    val ranked = base.join(broadcast(rank2("__a", "__x")), Seq("__a"))
+      .join(broadcast(rank2("__b", "__y")), Seq("__b"))
     val d = (c: Column) => c.cast("decimal(38,0)")
     val s = ranked.agg(count(lit(1)).as("n"),
       sum(d(col("__x"))).cast("double").as("__sx"),

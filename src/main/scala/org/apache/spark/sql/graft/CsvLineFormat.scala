@@ -151,10 +151,11 @@ class CsvLineFormat extends CSVFileFormat {
   * take the grammar below, and written by Spark's `UnivocityGenerator`
   * otherwise (the header always is). A row is formatted when not every field
   * is null and each non-null field is:
-  *   - a string that is non-empty and valid UTF-8, has no space at either
-  *     end and does not start with univocity's comment char `#`, and holds
-  *     no quote, escape or control byte (CR and LF among them). It is
-  *     copied, in quotes when it holds the delimiter;
+  *   - an empty string, written as the `emptyValue` (`""` by default);
+  *   - a string that is valid UTF-8, has no space at either end and does
+  *     not start with univocity's comment char `#`, and holds no quote,
+  *     escape or control byte (CR and LF among them). It is copied, in
+  *     quotes when it holds the delimiter;
   *   - a long, int, short or byte; a boolean; a float or double (as
   *     `Float`/`Double.toString`, `NaN` and `Infinity` included);
   *   - a date in years 1 to 9999, as `yyyy-MM-dd`.
@@ -176,6 +177,7 @@ private[graft] final class CsvLineWriter(path: String, schema: StructType, kinds
   private val quote = params.quote.toByte
   private val comment = settings.getComment.toByte
   private val lineSep = settings.getLineSeparatorString.getBytes(StandardCharsets.UTF_8)
+  private val emptyValue = params.emptyValueInWrite.getBytes(StandardCharsets.UTF_8)
   private val byteKind = {
     val k = byteKinds(quote, params.escape.toByte)
     k(delim & 0xFF) = Quote
@@ -204,7 +206,7 @@ private[graft] final class CsvLineWriter(path: String, schema: StructType, kinds
 
   private def plainString(s: UTF8String, i: Int): Boolean = {
     val n = s.numBytes
-    n > 0 && s.getByte(0) != ' ' && s.getByte(n - 1) != ' ' && s.getByte(0) != comment && {
+    n == 0 || s.getByte(0) != ' ' && s.getByte(n - 1) != ' ' && s.getByte(0) != comment && {
       val kind = scan(s, byteKind)
       quoted(i) = kind == Quote
       kind != Stop
@@ -217,9 +219,13 @@ private[graft] final class CsvLineWriter(path: String, schema: StructType, kinds
       if (i > 0) buf.put(delim)
       if (!row.isNullAt(i)) kinds(i) match {
         case Str =>
-          if (quoted(i)) buf.put(quote)
-          buf.utf8(row.getUTF8String(i))
-          if (quoted(i)) buf.put(quote)
+          val s = row.getUTF8String(i)
+          if (s.numBytes == 0) buf.put(emptyValue)
+          else {
+            if (quoted(i)) buf.put(quote)
+            buf.utf8(s)
+            if (quoted(i)) buf.put(quote)
+          }
         case Day => buf.date(row.getInt(i))
         case k => buf.scalar(row, i, k)
       }

@@ -151,6 +151,21 @@ class GraphSpec extends SparkSpec {
     assert(r.getLong(2) == 5L && r.getLong(3) == 1L)  // wedges, triangles
     assert(r.getDouble(4) == 0.6)
     assert(r.getDouble(5) == math.round(-20.0 / 28.0 * 1e6) / 1e6)
+    // degenerate graphs null the undefined ratio instead of raising
+    // DIVIDE_BY_ZERO. 4-cycle: every degree 2 -> 4 wedges, no triangle,
+    // no degree variance
+    val cyc = Graph.graphSummary(
+      Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("src", "dst"), "src", "dst")
+      .collect()(0)
+    assert(cyc.getLong(0) == 4L && cyc.getLong(1) == 4L)
+    assert(cyc.getLong(2) == 4L && cyc.getLong(3) == 0L)
+    assert(cyc.getDouble(4) == 0.0 && cyc.isNullAt(5), s"4-cycle: $cyc")
+    // two disjoint edges: no wedge at all, every degree 1
+    val pair = Graph.graphSummary(
+      Seq((1L, 2L), (3L, 4L)).toDF("src", "dst"), "src", "dst").collect()(0)
+    assert(pair.getLong(0) == 4L && pair.getLong(1) == 2L)
+    assert(pair.getLong(2) == 0L && pair.getLong(3) == 0L)
+    assert(pair.isNullAt(4) && pair.isNullAt(5), s"1-2, 3-4: $pair")
   }
 
   test("modularity: two triangles + bridge; unlabelled-node singleton fallback") {

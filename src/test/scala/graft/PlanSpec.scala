@@ -950,6 +950,34 @@ class PlanSpec extends SparkSpec {
       s"expected hash joins in the relaxation rounds:\n$p")
   }
 
+  private val joinOp =
+    "(SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin|BroadcastNestedLoopJoin|CartesianProduct)".r
+
+  private def joinsOf(plan: String): Seq[String] =
+    plan.linesIterator.filter(l => joinOp.findFirstIn(l).isDefined).toSeq
+
+  test("q136: plain PageRank runs the shared damped walk with its restart flag " +
+    "folded away — no seed join, the joins of the three rounds only") {
+    val joins = joinsOf(planOf("q136_pagerank"))
+    // the start rank's 1-row cross join, then per round: the contribution
+    // join, the spine's left join and the teleport's 1-row cross join
+    assert(joins.size == 10, s"expected 10 joins:\n${joins.mkString("\n")}")
+    assert(joins.count(_.contains("LeftOuter")) == 3 &&
+      joins.count(_.contains("BroadcastNestedLoopJoin")) == 4,
+      s"a restart flag join crept into plain PageRank:\n${joins.mkString("\n")}")
+    assert(!joins.exists(j => j.contains("LeftSemi") || j.contains("LeftAnti")),
+      s"a seed semi/anti join in plain PageRank:\n${joins.mkString("\n")}")
+  }
+
+  test("q270: spearman broadcasts its rank cells to the rows — both rank joins " +
+    "build the rank side") {
+    val joins = joinsOf(planOf("q270_spearman"))
+      .filterNot(_.contains("BroadcastNestedLoopJoin")) // the rank cells' gates
+    assert(joins.size == 2 && joins.forall(j =>
+      j.contains("BroadcastHashJoin") && j.contains("BuildRight")),
+      s"rank joins must broadcast the rank cells:\n${joins.mkString("\n")}")
+  }
+
   test("q365: every raking join broadcasts (vocabulary-sized marginals), no shuffle join") {
     // the IPF iterate must stay cell-relation-local: 6 scalings x
     // (marginal rollup + 2 broadcast joins); a SortMerge/ShuffledHash

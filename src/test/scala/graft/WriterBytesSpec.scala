@@ -173,6 +173,9 @@ class WriterBytesSpec extends SparkSpec {
     val header = Map("header" -> "true")
     assert(LineWriterBridge.hits(csv, clean, header).contains(500))
     assert(LineWriterBridge.hits(json, clean, Map.empty).contains(500))
+    // an empty string, as `typeCast` makes of a blank text cell, is a hit too
+    val blank = clean.limit(3).withColumn("s", expr("''"))
+    assert(LineWriterBridge.hits(csv, blank, header).contains(3))
     for ((format, options) <- Seq((csv, header), (json, Map.empty[String, String]))) {
       val hits = LineWriterBridge.hits(format, messy, options).get
       assert(hits > 100 && hits < 2900, s"$format: $hits of 3000 adversarial rows formatted")
