@@ -1,21 +1,42 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
 
-/** Loaders for the driver's synthetic star schema (see /root/repo/TESTDATA.md).
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
+
+/** Loaders for the synthetic star schema of the test data (see TESTDATA.md).
   *
   * Every named query receives `(spark, sfDir)`; this is the single place that
-  * maps logical table names to parquet paths. Reads are plain
-  * `spark.read.parquet` so Catalyst gets full pushdown/pruning — at cluster
-  * scale these would be partitioned tables behind a catalog, and this facade
-  * is the one seam to swap in `spark.table(name)`.
+  * maps logical table names to parquet paths. At cluster scale these would
+  * be partitioned tables behind a catalog, and this facade is the one seam
+  * to swap in `spark.table(name)`.
+  *
+  * A table that is one parquet file is planned from its footer, read once
+  * in the calling thread through `ParquetFileReader`, without starting a
+  * Spark job ([[read]]):
+  *  - the schema is declared, built by the same footer-to-schema code
+  *    Spark's inference job runs per file, so no inference job runs;
+  *  - a file of exactly ONE row group is read under `coalesce(1)`. Such a
+  *    file has one non-empty split whatever the split size, so the scan
+  *    loses no parallelism, and `Coalesce 1` reports `SinglePartition`,
+  *    which satisfies every clustered distribution: `EnsureRequirements`
+  *    plans no exchange under an aggregate, window or join over it.
+  * The scan beneath the `Coalesce 1` is the plain parquet scan, so filter
+  * pushdown and column pruning still reach it. Every other input — a
+  * directory, a glob, or a file of several row groups — keeps its planned
+  * splits, and only a non-file input pays the inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
-  /** Plain parquet read + one normalization: any TIMESTAMP_NTZ column (the
+  /** [[read]] + one normalization: any TIMESTAMP_NTZ column (the
     * driver's regenerated testdata writes micros with isAdjustedToUTC=false)
     * is cast to µs TimestampType, so `unix_micros(col)` downstream sees the
     * identical integer DuckDB's `epoch_us(col)` computes on the same file.
@@ -25,7 +46,7 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
-    val raw = spark.read.parquet(s"$sfDir/$name.parquet")
+    val raw = read(spark, s"$sfDir/$name.parquet")
     val ntz = raw.schema.fields.filter(_.dataType == TimestampNTZType)
     if (ntz.isEmpty) raw
     else {
@@ -37,6 +58,41 @@ object Tables {
         df.withColumn(f.name, col(f.name).cast(TimestampType)))
     }
   }
+
+  /** `spark.read.parquet(path)`, planned from the footer when `path` is one
+    * file (see the object doc): the declared schema, and `coalesce(1)` when
+    * the file holds exactly one row group. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame =
+    footer(spark, path) match {
+      case Some(f) =>
+        val df = spark.read.schema(declaredSchema(spark, f)).parquet(path)
+        if (f.getParquetMetadata.getBlocks.size == 1) df.coalesce(1) else df
+      case None => spark.read.parquet(path)
+    }
+
+  /** The footer of `path` when it names one visible file — not a glob, a
+    * directory or a missing path — read in the calling thread through the
+    * session's Hadoop conf. */
+  private[graft] def footer(spark: SparkSession, path: String): Option[Footer] = {
+    val p = new Path(path)
+    if (path.exists("{}[]*?\\".contains(_)) || p.getName.startsWith("_") ||
+        p.getName.startsWith(".")) None
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = p.getFileSystem(conf)
+      val status = try Some(fs.getFileStatus(p)) catch { case _: FileNotFoundException => None }
+      status.filter(_.isFile).map { st =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try new Footer(st.getPath, reader.getFooter) finally reader.close()
+      }
+    }
+  }
+
+  /** The schema Spark's inference job would give the file of `f`: its own
+    * footer-to-schema code (Spark's row metadata when the file carries it,
+    * else the converter) under the session's parquet settings. */
+  private[graft] def declaredSchema(spark: SparkSession, f: Footer): StructType =
+    ParquetFileFormat.readSchemaFromFooter(f, new ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
   def lineitem(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "lineitem")
   def orders(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "orders")
@@ -91,7 +147,9 @@ object Tables {
     * aggregate, where shipping raw rows violates "aggregate before you
     * shuffle" (guide §2.3; measured q01 0.9 -> 4.3 s) — heavy-map
     * operators over those opt in via Ops.fanoutScan. Scale-adaptive and
-    * conf-gated exactly like fanoutScan (no-op on multi-split scans). */
+    * conf-gated exactly like fanoutScan (no-op on multi-split scans); the
+    * one-row-group read is `Coalesce 1`, so the gate sees one partition
+    * and the fan-out still happens at ≥ 4 cores. */
   def documents(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Ops.fanoutScan(load(spark, sfDir, "documents"))
   /** embeddings does NOT fan out: measured 1.7 -> 4.1 s on q47 (the LSH

@@ -38,9 +38,17 @@ object AppliedQueries {
     // 2.11 -> 2.90 s: the exchange subtree re-executes per downstream
     // consumer above the Graph-side cut, multiplying a 600k-row shuffle
     // where the starved-but-cheap single-task scan ran once. Left direct.)
+    // The ok-keyed repartition ABOVE the set aggregate is where the rows
+    // expand: over a one-row-group lineitem (Tables plans it as
+    // `Coalesce 1`, no exchange) it fans the ~150k order sets out so the
+    // pair explode and the partial (pk, pk2) count run on every core, not
+    // in the scan's one task; over a multi-split lineitem the set
+    // aggregate's own ok-keyed exchange already satisfies it and
+    // EnsureRequirements drops it.
     val pairs = Tables.lineitem(s, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .groupBy("ok").agg(sort_array(collect_set(col("pk"))).as("__ps"))
+      .repartition(col("ok"))
       .select(posexplode(col("__ps")).as(Seq("__i", "pk")), col("__ps"))
       .select(col("pk"), explode(expr(
         "slice(__ps, __i + 2, size(__ps) - __i - 1)")).as("pk2"))

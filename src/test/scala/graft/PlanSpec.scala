@@ -11,11 +11,21 @@ import graft.types.DetectTypes
 /** Plan-shape regression guard: the properties SCALE.md claims are asserted
   * against the actual optimized plans, so a future refactor cannot silently
   * lose a pushdown, broadcast, or blocking guard.
+  *
+  * The pins plan the at-scale posture: every table is read from a copy of
+  * sf0.001 whose files hold two row groups or more, which [[Tables]] reads
+  * as any multi-split input, so aggregates, windows and joins plan their
+  * exchanges. The one-split posture (a one-row-group file read as
+  * `Coalesce 1`) has its own pins, over the original sf0.001 files.
   */
 class PlanSpec extends SparkSpec {
 
-  private def planOf(name: String): String =
-    Registry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
+  private lazy val tables = multiRowGroupCopy(sf0001)
+
+  private def executedOf(name: String, dir: String): String =
+    Registry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+
+  private def planOf(name: String): String = executedOf(name, tables)
 
   private def optimizedOf(df: DataFrame): String =
     df.queryExecution.optimizedPlan.toString
@@ -35,14 +45,43 @@ class PlanSpec extends SparkSpec {
       s"pruned column still read: $readSchema")
   }
 
+  test("one-split q84: the trailing window plans no exchange at all") {
+    val p = executedOf("q84_trailing_window", sf0001)
+    assert(!p.contains("Exchange"), s"expected no exchange over a one-row-group table:\n$p")
+  }
+
+  test("one-split q01: no exchange under the aggregate; filters pushed to the scan beneath Coalesce 1") {
+    val p = executedOf("q01_pricing_summary", sf0001)
+    val lines = p.linesIterator.toSeq
+    val agg = lines.indexWhere(_.contains("HashAggregate"))
+    assert(agg >= 0, s"expected an aggregate in:\n$p")
+    assert(!lines.drop(agg).exists(_.contains("Exchange")),
+      s"exchange planned under the aggregate:\n$p")
+    val coalesce = lines.indexWhere(_.contains("Coalesce 1"))
+    assert(coalesce >= 0, s"expected the one-row-group scan under Coalesce 1:\n$p")
+    assert(lines.drop(coalesce).exists(l => l.contains("FileScan parquet") &&
+        l.contains("PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate")),
+      s"shipdate filter not pushed to the scan beneath Coalesce 1:\n$p")
+  }
+
+  test("one-split q02: column pruning still reaches the scan beneath Coalesce 1") {
+    val p = executedOf("q02_cut", sf0001)
+    assert(p.contains("Coalesce 1"), s"expected the one-row-group scan under Coalesce 1:\n$p")
+    val readSchema = p.linesIterator.find(_.contains("ReadSchema")).getOrElse("")
+    assert(readSchema.contains("p_partkey") && readSchema.contains("p_name"),
+      s"expected selected columns in $readSchema")
+    assert(!readSchema.contains("p_comment") && !readSchema.contains("p_type"),
+      s"pruned column still read: $readSchema")
+  }
+
   test("q13: dimension joins broadcast (no fact-table shuffle join)") {
     val p = planOf("q13_equi_join")
     assert(p.contains("BroadcastHashJoin"), s"expected broadcast joins in:\n$p")
   }
 
   test("pair operators never plan a cartesian product") {
-    val emb = Tables.embeddings(spark, sf0001)
-    val docs = Tables.documents(spark, sf0001)
+    val emb = Tables.embeddings(spark, tables)
+    val docs = Tables.documents(spark, tables)
     val plans = Seq(
       optimizedOf(Similarity.cosineNearDupPairs(emb, 0.5, blockCol = pmod(col("vec_id"), lit(7)))),
       optimizedOf(Similarity.embeddingNearDupPairs(emb, 0.9, dim = 64)),
@@ -60,7 +99,7 @@ class PlanSpec extends SparkSpec {
   test("q26: exact dedup shuffles the fingerprint, never the content") {
     // the aggregation key is the md5 fingerprint; the text column must not
     // survive past the projection into the aggregate
-    val p = optimizedOf(Registry.queries("q26_dedup_exact")(spark, sf0001))
+    val p = optimizedOf(Registry.queries("q26_dedup_exact")(spark, tables))
     val aggLine = p.linesIterator.find(_.contains("Aggregate")).getOrElse("")
     assert(aggLine.contains("fp"), s"aggregate not keyed on fingerprint: $aggLine")
     assert(!aggLine.contains("text#"), s"content column reaches the aggregate: $aggLine")
@@ -101,7 +140,7 @@ class PlanSpec extends SparkSpec {
     // the total aggregates the SAME count relation as the top-V path, so
     // AQE must reuse the token-keyed exchange instead of re-scanning the
     // corpus; assert on the executed plan (reuse materializes at runtime)
-    val df = Registry.queries("q72_vocabulary")(spark, sf0001)
+    val df = Registry.queries("q72_vocabulary")(spark, tables)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
     assert(p.contains("ReusedExchange"),
@@ -109,7 +148,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q73: the delta join carries fingerprints only — text never crosses the exchange") {
-    val p = optimizedOf(Registry.queries("q73_corpus_delta")(spark, sf0001))
+    val p = optimizedOf(Registry.queries("q73_corpus_delta")(spark, tables))
     val joinIdx = p.linesIterator.indexWhere(_.contains("Join FullOuter"))
     assert(joinIdx >= 0, s"expected the full-outer delta join in:\n$p")
     val below = p.linesIterator.drop(joinIdx).mkString("\n")
@@ -148,7 +187,7 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val p = graft.pipeline.TextAnalysis.tfidfTopTerms(
-        Tables.documents(spark, sf0001), "doc_id", "text", k = 5)
+        Tables.documents(spark, tables), "doc_id", "text", k = 5)
         .queryExecution.executedPlan.toString
       val smj = p.linesIterator.filter(_.contains("SortMergeJoin")).toSeq
       assert(smj.exists(_.contains("term#")),
@@ -185,7 +224,7 @@ class PlanSpec extends SparkSpec {
     // md5 feeding a (doc, pos)-sorted reassembly — never a collected array
     // probed linearly, never a nested-loop compare
     import graft.pipeline.Curation
-    val docs = Tables.documents(spark, sf0001)
+    val docs = Tables.documents(spark, tables)
     val df = Curation.dedupLines(docs, "doc_id", "text",
       maxDocs = 3, broadcastLimit = -1L)
     val p = optimizedOf(df)
@@ -236,7 +275,7 @@ class PlanSpec extends SparkSpec {
   test("q82: keep-best election is an aggregation, never a per-cluster window sort") {
     // the election subtree must be agg+join (map-side combinable); a window
     // formulation would single-partition-sort a giant cluster
-    val docs = Tables.documents(spark, sf0001)
+    val docs = Tables.documents(spark, tables)
     val edges = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
       blockCol = array_min(Dedup.wordShingles(col("text"), 3)))
     val scores = docs.select(col("doc_id"), length(col("text")).as("score"))
@@ -283,7 +322,7 @@ class PlanSpec extends SparkSpec {
   test("q53: curation filters run before the dedup shuffle") {
     // language/quality predicates must sit below the fingerprint aggregate:
     // discarded rows never reach the exchange
-    val plan = Registry.queries("q53_curate")(spark, sf0001).queryExecution.optimizedPlan
+    val plan = Registry.queries("q53_curate")(spark, tables).queryExecution.optimizedPlan
     import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter}
     val agg = plan.collectFirst { case a: Aggregate => a }
     assert(agg.isDefined, "expected the keep-list aggregate")

@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession across all suites (JVM-wide singleton). */
@@ -16,6 +18,56 @@ trait SparkSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
     spark.sparkContext.setCheckpointDir(dir.toString)
     try f(dir) finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  /** Runs `f` and counts the Spark jobs it starts and the stages it runs
+    * (skipped stages not counted), once the listener bus has delivered
+    * every event. */
+  def jobsAndStages[T](f: => T): (Int, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+    }
+    // the bus is internal to Spark, hence reflection
+    def drain(): Unit = {
+      val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    }
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try { f; drain() } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get, stages.get)
+  }
+
+  /** Writes `df` as the ONE parquet file `file` with Spark's writer, in
+    * row groups of at most `rowsPerGroup` rows. */
+  def writeParquetFile(df: DataFrame, file: String, rowsPerGroup: Long): Unit = {
+    val out = Files.createTempDirectory("graft-pq").resolve("out")
+    df.coalesce(1).write.option("parquet.block.row.count.limit", rowsPerGroup).parquet(out.toString)
+    val parts = Files.list(out).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+    require(parts.length == 1, s"expected one part file, got ${parts.mkString(", ")}")
+    Files.move(parts.head, Paths.get(file))
+  }
+
+  /** A copy of the ten tables of `sfDir`, each one file of at least two
+    * row groups (every table has two rows or more), made once per JVM: it
+    * plans the one split the original plans, but [[Tables]] leaves it as
+    * read instead of planning it as one partition — the multi-split
+    * posture the plan pins describe. */
+  def multiRowGroupCopy(sfDir: String): String = SparkSpec.copies.synchronized {
+    SparkSpec.copies.getOrElseUpdate(sfDir, {
+      val dir = Files.createTempDirectory("graft-rowgroups").toString
+      Tables.names.foreach { t =>
+        val raw = spark.read.parquet(s"$sfDir/$t.parquet")
+        writeParquetFile(raw, s"$dir/$t.parquet", math.max(1L, (raw.count() + 1) / 2))
+      }
+      dir
+    })
   }
 
   /** `f` run compiled, then interpreted: first with whole-stage codegen and
@@ -36,6 +88,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
+  private val copies = scala.collection.mutable.Map[String, String]()
+
   lazy val session: SparkSession = SparkEntry.localSession("4")
     .appName("graft-test")
     // bucketed-table specs (BucketingSpec) save to the session catalog;
